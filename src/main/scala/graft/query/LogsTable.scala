@@ -21,10 +21,17 @@ final case class LogsTable(df: DataFrame) {
   /** Canonical point lookup ("typically one would specify a correlation id",
     * reference: README.rst:73-74; doc/json_tricks.rst:28). At scale pair with
     * storage bucketed/sorted on `correlation_id` + parquet bloom filters for
-    * index-parity row-group skipping.
+    * index-parity row-group skipping. The store writes a filter only for a
+    * chunk that is not fully dictionary-encoded (the dictionary filter
+    * prunes the rest) and sizes it to each file's distinct ids
+    * ([[graft.store.LogStore]]).
+    *
+    * The id is lower-cased with Spark's `lower`, the function ingest
+    * applies to stored ids, so the match does not depend on the JVM's
+    * default locale; the folded literal still pushes into the scan.
     */
   def byCorrelationId(id: String): LogsTable =
-    LogsTable(df.filter(col("correlation_id") === lit(id.toLowerCase)))
+    LogsTable(df.filter(col("correlation_id") === lower(lit(id))))
 
   /** Time-range constraint -> partition pruning on the derived `date`
     * column when present (the hypertable chunk-exclusion equivalent,
@@ -132,7 +139,7 @@ final case class LogsTable(df: DataFrame) {
 
   /** ILIKE-ANY over an arbitrary column (e.g. a nested JSON field). */
   def ilikeAny(c: Column, patterns: Seq[String]): Column =
-    patterns.map(p => lower(c).like(p.toLowerCase)).reduce(_ || _)
+    patterns.map(p => lower(c).like(p.toLowerCase(java.util.Locale.ROOT))).reduce(_ || _)
 
   /** `ORDER BY time DESC LIMIT n` — recent events top-k
     * (reference: README.rst:102-103). Catalyst plans this as

@@ -29,7 +29,7 @@ final class BucketedStore(spark: SparkSession) {
       .mode(SaveMode.Overwrite)
       .bucketBy(buckets, bucketCol)
       .sortBy(bucketCol)
-      .option("parquet.bloom.filter.enabled#" + bucketCol, "true")
+      .options(WritePolicy.keyBloom(bucketCol))
       .format("parquet")
       .saveAsTable(table)
 

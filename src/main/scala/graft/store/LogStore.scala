@@ -10,11 +10,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * At cluster scale the same layout holds: each micro-batch append writes
   * only the dates it touches; bloom filters on `correlation_id` give
   * point-lookup row-group skipping (the btree-index analog,
-  * reference: migration:35).
+  * reference: migration:35). Parquet writes no filter for a fully
+  * dictionary-encoded `correlation_id` chunk (the dictionary filter prunes
+  * those instead), and each filter it does write is sized to the distinct
+  * ids in its file ([[WritePolicy]]), so a small epoch file carries a
+  * small filter.
   */
 final class LogStore(root: String) {
 
   private def path(table: String) = s"$root/$table"
+
+  private val KeyBloom = WritePolicy.keyBloom("correlation_id")
 
   // ---- union-schema sidecar -------------------------------------------
   // The "table-format catalog" a 100 TB deployment would use, in miniature:
@@ -148,7 +154,7 @@ final class LogStore(root: String) {
   def append(table: String, df: DataFrame): Unit = {
     val writer = df.write
       .mode("append")
-      .option("parquet.bloom.filter.enabled#correlation_id", "true")
+      .options(KeyBloom)
     val partitioned =
       if (df.columns.contains("date")) writer.partitionBy("date") else writer
     partitioned.parquet(path(table))
@@ -202,7 +208,7 @@ final class LogStore(root: String) {
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .option("parquet.bloom.filter.enabled#correlation_id", "true")
+      .options(KeyBloom)
       .partitionBy(parts: _*)
       .parquet(path(table))
     updateUnionSchema(df.sparkSession, table,
@@ -296,7 +302,7 @@ final class LogStore(root: String) {
     val tmp = new org.apache.hadoop.fs.Path(
       s"${path(table)}.compact-tmp/date=$date/batch_id=compacted-$date")
     data.repartition(nFiles).write.mode("overwrite")
-      .option("parquet.bloom.filter.enabled#correlation_id", "true")
+      .options(KeyBloom)
       .parquet(tmp.toString)
     val written = spark.read.parquet(tmp.toString).count()
     require(written == expected, s"compaction row mismatch: $written != $expected")

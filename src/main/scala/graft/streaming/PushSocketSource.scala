@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.io.{BufferedReader, InputStreamReader}
+import java.io.{ByteArrayOutputStream, InputStream}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
@@ -27,7 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    2-frame [level, message] shape maps to the message payload
   *    (io/__init__.py:89-94 `recv_multipart` → `Message(*raw)`);
   *  - newline-delimited UTF-8 JSON (anything else): the zero-ceremony
-  *    path used by fixtures and simple forwarders.
+  *    path used by fixtures and simple forwarders. A line is held to the
+  *    same [[Zmtp.MaxFrameBytes]] cap as a ZMTP frame, and a sender that
+  *    passes it is disconnected ([[PushSocketSource.readLines]]).
   *
   * Reference semantics preserved:
   *  - bind-side collector, N connecting senders, fan-in to one stream
@@ -95,6 +97,57 @@ object PushSocketSource {
       .option("flushSize", config.maxBatchSize.toString)
       .option("flushAgeMs", (config.maxBatchAgeSeconds * 1000L).toString)
       .load()
+
+  /** Newline-delimited frames off `in`, ended as `BufferedReader.readLine`
+    * ends them (`\n`, `\r` or `\r\n`, plus a final unterminated line),
+    * decoded as UTF-8 and passed to `admit` while `running()` holds. Reads
+    * are block-buffered. A line longer than [[Zmtp.MaxFrameBytes]] throws
+    * IllegalArgumentException once the cap is passed, before the line is
+    * held whole: one sender that never ends its line cannot exhaust the
+    * driver heap, and the caller drops it as it drops a ZMTP violation.
+    */
+  private[graft] def readLines(
+      in: InputStream,
+      running: () => Boolean,
+      admit: String => Unit): Unit = {
+    val buf = new Array[Byte](8192)
+    val pending = new ByteArrayOutputStream() // a line that spans reads
+    def hold(from: Int, until: Int): Unit = {
+      if (pending.size.toLong + (until - from) > Zmtp.MaxFrameBytes)
+        throw new IllegalArgumentException(
+          s"line longer than ${Zmtp.MaxFrameBytes} bytes")
+      pending.write(buf, from, until - from)
+    }
+    def emit(from: Int, until: Int): Unit = {
+      val line =
+        if (pending.size == 0) new String(buf, from, until - from, StandardCharsets.UTF_8)
+        else { hold(from, until); pending.toString(StandardCharsets.UTF_8) }
+      pending.reset()
+      if (running()) admit(line)
+    }
+    var skipLf = false // the last read ended on '\r': a leading '\n' is its pair
+    var n = in.read(buf)
+    while (n >= 0 && running()) {
+      var i = if (skipLf && n > 0 && buf(0) == '\n') 1 else 0
+      skipLf = false
+      var start = i
+      while (i < n) {
+        val b = buf(i)
+        if (b == '\n' || b == '\r') {
+          emit(start, i)
+          if (b == '\r') {
+            if (i + 1 == n) skipLf = true
+            else if (buf(i + 1) == '\n') i += 1
+          }
+          start = i + 1
+        }
+        i += 1
+      }
+      hold(start, n)
+      n = in.read(buf)
+    }
+    if (n < 0 && pending.size > 0) emit(0, 0)
+  }
 
   /** Minimal PUSH-side client, the `tests/sender.py` analog: connect and
     * write one frame per message. Used by the e2e spec and usable as a
@@ -215,17 +268,11 @@ final class PushSocketMicroBatchStream(
               admit(new String(parts.last, StandardCharsets.UTF_8)))
       } else if (first >= 0) {
         raw.unread(first)
-        val in = new BufferedReader(
-          new InputStreamReader(raw, StandardCharsets.UTF_8))
-        var line = in.readLine()
-        while (line != null && !stopped) {
-          admit(line)
-          line = in.readLine()
-        }
+        PushSocketSource.readLines(raw, () => !stopped, admit)
       }
     } catch {
       case _: java.io.IOException => // sender went away: fire-and-forget
-      case _: IllegalArgumentException => // ZMTP violation: drop the peer
+      case _: IllegalArgumentException => // ZMTP violation or over-cap line: drop the peer
     } finally client.close()
 
   private def admit(frame: String): Unit = lock.synchronized {

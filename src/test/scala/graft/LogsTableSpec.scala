@@ -25,6 +25,20 @@ class LogsTableSpec extends SparkSpec {
     assert(logs.byCorrelationId("C1").df.count() == 2) // case-normalized
   }
 
+  test("lookup and ILIKE do not follow the JVM default locale") {
+    // ingest lower-cases ids with Spark's `lower`; under a Turkish default
+    // locale String.toLowerCase maps "I" to a dotless "ı" and would miss
+    val stored = LogsTable(Seq(
+      (ts("2024-01-01 10:00:00"), "INFO ready", "req-i1", "{}")
+    ).toDF("time", "message", "correlation_id", "data_raw"))
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      assert(stored.byCorrelationId("REQ-I1").df.count() == 1)
+      assert(stored.searchMessage(Seq("%INFO%")).df.count() == 1)
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("inTimeRange filters by event time") {
     val got = logs.inTimeRange(ts("2024-01-01 00:00:00"), ts("2024-01-02 23:59:59"))
       .df.select("correlation_id").as[String].collect().sorted
