@@ -185,6 +185,14 @@ private[graft] object GlobalRank {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StructType, StructField, IntegerType, LongType}
+    // the long-typed weight contract, checked once before the tier gate:
+    // the local fold reads weights with getLong, the distributed sum
+    // would widen anything numeric, so without this the outcome of a
+    // non-Long weight depended on the frame's size
+    weights.foreach { case (w, _) =>
+      val dt = df.schema(w).dataType
+      require(dt == LongType, s"weight column $w must be LongType, got $dt")
+    }
     val spark = df.sparkSession
     val p = math.max(1, spark.sessionState.conf.numShufflePartitions)
     // the RangePartitioning exchange evaluates its child TWICE — once for

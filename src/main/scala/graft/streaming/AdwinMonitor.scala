@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming ADWIN change detector (Bifet & Gavaldà 2007, "Learning from
@@ -26,32 +25,22 @@ import java.sql.Timestamp
   * O(M·log(W/M)) per type — bounded for any stream length. All bucket
   * sums/counts are exact longs; only the cut check floats.
   *
-  * Day rollover within the sorted micro-batch keeps emission
-  * deterministic under replay; cross-batch out-of-order days are
-  * trusted to the ingest edge (the CusumMonitor caveat class). Two
-  * explicit consequences of rollover-only emission (r15 ADVICE): the
-  * last IN-PROGRESS day per type is never emitted — it sits in state
-  * until a later day's first event closes it — so a quiesced stream
-  * holds its final day open indefinitely (slightly more consequential
-  * here than for the fixed-reference monitors, since an unclosed day
-  * also delays ADWIN's adaptive cut decision); and a cross-batch
-  * out-of-order event folds into the CURRENT open day's count rather
-  * than its own. A deployment needing prompt closure should add an
-  * event-time timeout (GroupStateTimeout.EventTimeTimeout) flushing the
-  * open day after a grace period — left out here to keep the whole
-  * monitor family's emission semantics identical and replay-exact.
+  * Days close by the day-count rules on [[WindowedMonitor]], through
+  * [[DailyCounts]]. Two of those rules weigh more here than for the
+  * fixed-reference monitors: a quiet type holds its last day, and its
+  * state, indefinitely, which also delays ADWIN's adaptive cut decision;
+  * and a late day reopens (closing the open day) instead of clamping.
   */
 object AdwinMonitor {
 
-  final case class Ev(event_type: String, ts: Timestamp)
+  final case class Ev(event_type: String, ts: Timestamp) extends TypedEvent
   /** newest-first bucket lists: sums(i)/counts(i) is the i-th newest. */
   final case class AdwinState(
-      day: Long, n: Long, sums: List[Long], counts: List[Long])
+      day: Long, n: Long, sums: List[Long], counts: List[Long]) extends DayCount
   final case class DayRow(
       event_type: String, day: Long, n: Long,
       width: Long, mean_bp: Long, cut: Boolean)
 
-  private val DayMs = 86400000L
   private val MaxPerClass = 5
 
   /** Merge the two OLDEST buckets of any capacity class exceeding
@@ -128,38 +117,13 @@ object AdwinMonitor {
       events: Dataset[Ev],
       delta: Double = 0.01): Dataset[DayRow] = {
     require(delta > 0 && delta < 1, "confidence delta must be in (0, 1)")
-    implicit val stateEnc = Encoders.product[AdwinState]
-    implicit val outEnc = Encoders.product[DayRow]
-    events
-      .groupByKey(_.event_type)(Encoders.STRING)
-      .flatMapGroupsWithState[AdwinState, DayRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (tpe: String, batch: Iterator[Ev], state: GroupState[AdwinState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(
-              AdwinState(sorted.head.ts.getTime / DayMs, 0L, Nil, Nil))
-            val out = scala.collection.mutable.ArrayBuffer.empty[DayRow]
-            def close(c: Long, day: Long, s: AdwinState): AdwinState = {
-              val (s1, c1) = compress(c :: s.sums, 1L :: s.counts)
-              val (s2, c2, cutFlag) = detect(s1, c1, delta)
-              val width = c2.sum
-              val meanBp =
-                math.floor(s2.sum.toDouble / width * 10000 + 0.5).toLong
-              out += DayRow(tpe, day, c, width, meanBp, cutFlag)
-              s.copy(sums = s2, counts = c2)
-            }
-            sorted.foreach { e =>
-              val d = e.ts.getTime / DayMs
-              if (d != st.day) {
-                val closed = close(st.n, st.day, st)
-                st = closed.copy(day = d, n = 1L)
-              } else st = st.copy(n = st.n + 1)
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    DailyCounts[Ev, AdwinState, DayRow](events, AdwinState(0L, 0L, Nil, Nil))(
+        (s, d, n) => s.copy(day = d, n = n)) { (tpe, s) =>
+      val (s1, c1) = compress(s.n :: s.sums, 1L :: s.counts)
+      val (s2, c2, cutFlag) = detect(s1, c1, delta)
+      val width = c2.sum
+      val meanBp = math.floor(s2.sum.toDouble / width * 10000 + 0.5).toLong
+      (DayRow(tpe, s.day, s.n, width, meanBp, cutFlag), s.copy(sums = s2, counts = c2))
+    }
   }
 }

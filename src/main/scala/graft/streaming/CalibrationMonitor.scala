@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming calibration monitor — the live twin of
@@ -32,10 +31,12 @@ object CalibrationMonitor extends Serializable {
 
   final case class Pred(
       source: String, ts: Timestamp, num: Long, den: Long, label: Boolean)
+      extends SourceEvent
 
   final case class BinsState(
       win: Long, n: Seq[Long], nPos: Seq[Long], s20: Seq[Long], b20: Seq[Long],
       cumN: Seq[Long], cumNPos: Seq[Long], cumS20: Seq[Long], cumB20: Seq[Long])
+      extends InWindow
 
   final case class WinRow(
       source: String, window_start: Long, n: Long, n_pos: Long,
@@ -64,8 +65,6 @@ object CalibrationMonitor extends Serializable {
       windowMs: Long = 3600000L): Dataset[WinRow] = {
     require(bins >= 2 && bins <= 10000, "2 <= bins <= 10000")
     require(eceCeilingBp >= 0 && windowMs > 0, "ceiling >= 0, window > 0")
-    implicit val stateEnc = Encoders.product[BinsState]
-    implicit val outEnc = Encoders.product[WinRow]
     // the batch summary's sorted-bin ECE fold and Brier mean
     def ece(n: Seq[Long], nPos: Seq[Long], s20: Seq[Long]): Long = {
       val total = n.sum
@@ -81,55 +80,31 @@ object CalibrationMonitor extends Serializable {
       }
       bp(acc)
     }
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[BinsState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Pred], state: GroupState[BinsState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          val valid = sorted.filter(_.den > 0)
-          if (valid.isEmpty) Iterator.empty
-          else {
-            val zero = Vector.fill(bins)(0L)
-            var st = state.getOption.getOrElse(
-              BinsState(valid.head.ts.getTime / windowMs,
-                zero, zero, zero, zero, zero, zero, zero, zero))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: BinsState): Unit = {
-              val total = s.n.sum
-              if (total > 0) {
-                val e = ece(s.n, s.nPos, s.s20)
-                out += WinRow(src, s.win * windowMs, total, s.nPos.sum, e,
-                  bp(s.b20.sum.toDouble / (total.toDouble * 1048576.0)),
-                  ece(s.cumN, s.cumNPos, s.cumS20),
-                  e >= eceCeilingBp)
-              }
-            }
-            valid.foreach { p =>
-              val w = p.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = BinsState(w, zero, zero, zero, zero,
-                  st.cumN, st.cumNPos, st.cumS20, st.cumB20)
-              }
-              val (b, s20, b20) = rowTerms(p.num, p.den, p.label, bins)
-              val pos = if (p.label) 1L else 0L
-              st = st.copy(
-                n = st.n.updated(b, st.n(b) + 1L),
-                nPos = st.nPos.updated(b, st.nPos(b) + pos),
-                s20 = st.s20.updated(b, st.s20(b) + s20),
-                b20 = st.b20.updated(b, st.b20(b) + b20),
-                cumN = st.cumN.updated(b, st.cumN(b) + 1L),
-                cumNPos = st.cumNPos.updated(b, st.cumNPos(b) + pos),
-                cumS20 = st.cumS20.updated(b, st.cumS20(b) + s20),
-                cumB20 = st.cumB20.updated(b, st.cumB20(b) + b20))
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    val zero = Vector.fill(bins)(0L)
+    WindowedMonitor[Pred, BinsState, WinRow](events.filter(_.den > 0), windowMs)(
+      open = w => BinsState(w, zero, zero, zero, zero, zero, zero, zero, zero),
+      step = (st, p) => {
+        val (b, s20, b20) = rowTerms(p.num, p.den, p.label, bins)
+        val pos = if (p.label) 1L else 0L
+        st.copy(
+          n = st.n.updated(b, st.n(b) + 1L),
+          nPos = st.nPos.updated(b, st.nPos(b) + pos),
+          s20 = st.s20.updated(b, st.s20(b) + s20),
+          b20 = st.b20.updated(b, st.b20(b) + b20),
+          cumN = st.cumN.updated(b, st.cumN(b) + 1L),
+          cumNPos = st.cumNPos.updated(b, st.cumNPos(b) + pos),
+          cumS20 = st.cumS20.updated(b, st.cumS20(b) + s20),
+          cumB20 = st.cumB20.updated(b, st.cumB20(b) + b20))
+      },
+      emit = (src, s) => {
+        val total = s.n.sum
+        val e = ece(s.n, s.nPos, s.s20)
+        Some(WinRow(src, s.win * windowMs, total, s.nPos.sum, e,
+          bp(s.b20.sum.toDouble / (total.toDouble * 1048576.0)),
+          ece(s.cumN, s.cumNPos, s.cumS20),
+          e >= eceCeilingBp))
+      },
+      carry = (s, w) => BinsState(w, zero, zero, zero, zero,
+        s.cumN, s.cumNPos, s.cumS20, s.cumB20))
   }
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import java.sql.Timestamp
+import org.apache.spark.sql.Dataset
 
 /** Streaming two-sample Cramér–von Mises monitor — the live twin of
   * [[graft.operators.Quality.cramerVonMises]] and the L2 companion to
@@ -30,9 +28,8 @@ import java.sql.Timestamp
   */
 object CvmMonitor extends Serializable {
 
-  final case class Scored(source: String, ts: Timestamp, value: Double)
-
-  final case class HistState(win: Long, counts: Seq[Long], cumCounts: Seq[Long])
+  type Scored = ScoreHistogram.Scored
+  val Scored = ScoreHistogram.Scored
 
   final case class WinRow(
       source: String, window_start: Long, n_events: Long,
@@ -45,14 +42,6 @@ object CvmMonitor extends Serializable {
       cvmCeilingBp: Long,
       windowMs: Long = 3600000L): Dataset[WinRow] = {
     val bins = refCounts.length
-    require(bins > 1 && cuts.length == bins - 1,
-      "need B >= 2 reference bins and B-1 cutpoints")
-    require(cuts.zip(cuts.tail).forall { case (a, b) => a <= b },
-      "cutpoints must be non-decreasing")
-    require(refCounts.forall(_ >= 0) && refCounts.sum > 0,
-      "reference histogram must be non-negative with positive mass")
-    require(cvmCeilingBp > 0 && windowMs > 0, "positive ceiling and window")
-    val cutsArr = cuts.toArray
     val nRef: Long = refCounts.sum
     val cumRef: Array[Long] = refCounts.scanLeft(0L)(_ + _).tail.toArray
     val refArr: Array[Long] = refCounts.toArray
@@ -77,44 +66,10 @@ object CvmMonitor extends Serializable {
         (nRef.toDouble * nCur.toDouble) / (nn * nn)
       math.floor(t * 10000 + 0.5).toLong
     }
-    implicit val stateEnc = Encoders.product[HistState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[HistState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Scored], state: GroupState[HistState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            val zero = Vector.fill(bins)(0L)
-            var st = state.getOption.getOrElse(
-              HistState(sorted.head.ts.getTime / windowMs, zero, zero))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: HistState): Unit = {
-              val n = s.counts.sum
-              if (n > 0) {
-                val bp = cvmBpOf(s.counts)
-                out += WinRow(src, s.win * windowMs, n, bp,
-                  cvmBpOf(s.cumCounts), bp > cvmCeilingBp)
-              }
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // out-of-order across micro-batches CLAMPS into the current
-              // window (the KsMonitor/SprtMonitor r14-advisor discipline)
-              if (w > st.win) {
-                close(st)
-                st = HistState(w, zero, st.cumCounts)
-              }
-              val b = ScoreDriftMonitor.binOf(e.value, cutsArr)
-              st = st.copy(
-                counts = st.counts.updated(b, st.counts(b) + 1L),
-                cumCounts = st.cumCounts.updated(b, st.cumCounts(b) + 1L))
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    ScoreHistogram.scored(events, cuts, refCounts, cvmCeilingBp > 0, windowMs) {
+      (src, start, n, counts, cum) =>
+        val bp = cvmBpOf(counts)
+        WinRow(src, start, n, bp, cvmBpOf(cum), bp > cvmCeilingBp)
+    }
   }
 }

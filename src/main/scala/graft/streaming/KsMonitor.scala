@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import java.sql.Timestamp
+import org.apache.spark.sql.Dataset
 
 /** Streaming two-sample Kolmogorov-Smirnov monitor — the live twin of
   * [[graft.operators.Quality.ksTest]] (the r13 batch audit shipped
@@ -31,9 +29,8 @@ import java.sql.Timestamp
   */
 object KsMonitor extends Serializable {
 
-  final case class Scored(source: String, ts: Timestamp, value: Double)
-
-  final case class HistState(win: Long, counts: Seq[Long], cumCounts: Seq[Long])
+  type Scored = ScoreHistogram.Scored
+  val Scored = ScoreHistogram.Scored
 
   final case class WinRow(
       source: String, window_start: Long, n_events: Long,
@@ -46,14 +43,6 @@ object KsMonitor extends Serializable {
       ksCeiling: Double,
       windowMs: Long = 3600000L): Dataset[WinRow] = {
     val bins = refCounts.length
-    require(bins > 1 && cuts.length == bins - 1,
-      "need B >= 2 reference bins and B-1 cutpoints")
-    require(cuts.zip(cuts.tail).forall { case (a, b) => a <= b },
-      "cutpoints must be non-decreasing")
-    require(refCounts.forall(_ >= 0) && refCounts.sum > 0,
-      "reference histogram must be non-negative with positive mass")
-    require(ksCeiling > 0 && windowMs > 0, "positive ceiling and window")
-    val cutsArr = cuts.toArray
     // reference cumulative masses, precomputed once on the driver
     val nRef: Long = refCounts.sum
     val cumRef: Array[Long] = refCounts.scanLeft(0L)(_ + _).tail.toArray
@@ -76,45 +65,10 @@ object KsMonitor extends Serializable {
       val d = best.toDouble / (nRef.toDouble * nCur.toDouble)
       math.floor(d * 10000 + 0.5) / 10000
     }
-    implicit val stateEnc = Encoders.product[HistState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[HistState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Scored], state: GroupState[HistState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            val zero = Vector.fill(bins)(0L)
-            var st = state.getOption.getOrElse(
-              HistState(sorted.head.ts.getTime / windowMs, zero, zero))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: HistState): Unit = {
-              val n = s.counts.sum
-              if (n > 0) {
-                val d = ksOf(s.counts)
-                out += WinRow(src, s.win * windowMs, n, d, ksOf(s.cumCounts),
-                  d > ksCeiling)
-              }
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = HistState(w, zero, st.cumCounts)
-              }
-              val b = ScoreDriftMonitor.binOf(e.value, cutsArr)
-              st = st.copy(
-                counts = st.counts.updated(b, st.counts(b) + 1L),
-                cumCounts = st.cumCounts.updated(b, st.cumCounts(b) + 1L))
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    ScoreHistogram.scored(events, cuts, refCounts, ksCeiling > 0, windowMs) {
+      (src, start, n, counts, cum) =>
+        val d = ksOf(counts)
+        WinRow(src, start, n, d, ksOf(cum), d > ksCeiling)
+    }
   }
 }

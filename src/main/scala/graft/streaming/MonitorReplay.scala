@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -15,11 +15,15 @@ import org.apache.spark.sql.functions._
   * caller-supplied reference from the prefix with one distributed
   * aggregate, then drives the REAL streaming operator — the same
   * `flatMapGroupsWithState` plan production runs — over the remainder
-  * through a MemoryStream, one micro-batch, `processAllAvailable`.
-  * Emission is deterministic: every monitor assigns state windows from
-  * EVENT time, all four fold order-insensitively within a window
-  * (histogram / moment / count buckets commute), and only closed
-  * windows emit — per source, every day but its last.
+  * through a MemoryStream, one micro-batch (q318: two),
+  * `processAllAvailable`. There are 17 replays. Emission is
+  * deterministic: every monitor assigns state windows from EVENT time;
+  * every windowed monitor replayed here folds order-insensitively within
+  * a window (histogram / moment / count buckets commute — the shared
+  * core still sorts each batch stably by ts, because TopKMonitor's
+  * Misra–Gries fold, which no replay covers, does depend on order); and
+  * only closed windows emit — per source, every day but its last (the
+  * rules on [[WindowedMonitor]]).
   *
   * The DuckDB oracle replays the whole composition in SQL (the q300
   * composed-oracle technique): the same day split, the same reference
@@ -53,15 +57,14 @@ object MonitorReplay {
   }
 
   /** Run one memory-sink streaming query to completion and return its
-    * rows (single micro-batch — delegates to [[runStreamBatches]], the
-    * one harness implementation; the replay result is bounded:
-    * sources × days).
+    * rows (single micro-batch over [[drain]], the one harness; the
+    * replay result is bounded: sources × days).
     */
-  private def runStream[I: org.apache.spark.sql.Encoder, O: org.apache.spark.sql.Encoder](
+  private def runStream[I: Encoder, O: Encoder](
       spark: SparkSession,
       rows: Seq[I],
-      mon: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.Dataset[O]): Seq[O] =
-    runStreamBatches(spark, Seq(rows), mon)
+      mon: Dataset[I] => Dataset[O]): Seq[O] =
+    drain(spark, Seq(rows), mon)(_.as[O].collect().toSeq)
 
   /** q302: [[PageHinkleyMonitor]] replayed over daily event-type counts.
     * μ is fitted from the calibration week — ⌊refEvents / (7·types)⌋,
@@ -469,29 +472,15 @@ object MonitorReplay {
     * watermark + windowed-aggregation path, not custom state) to
     * completion over one micro-batch and return the appended rows.
     */
-  private def runStreamDf[I: org.apache.spark.sql.Encoder](
+  private def runStreamDf[I: Encoder](
       spark: SparkSession,
       rows: Seq[I],
-      mon: DataFrame => DataFrame): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[I]
-    val name = s"graft_replay_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = mon(stream.toDS().toDF())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      stream.addData(rows: _*)
-      q.processAllAvailable()
-      val schema = spark.table(name).schema
-      val data = spark.table(name).collect().toIndexedSeq
-      spark.createDataFrame(
-        new java.util.ArrayList(scala.jdk.CollectionConverters
-          .SeqHasAsJava(data).asJava), schema)
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(name)
+      mon: DataFrame => DataFrame): DataFrame =
+    drain(spark, Seq(rows), (ds: Dataset[I]) => mon(ds.toDF())) { sink =>
+      spark.createDataFrame(new java.util.ArrayList(
+        scala.jdk.CollectionConverters.SeqHasAsJava(sink.collect().toIndexedSeq).asJava),
+        sink.schema)
     }
-  }
 
   /** q317: [[QualityMonitor]] replayed over the raw event stream with
     * four row-local constraints (value non-null, value ∈ [0, 150],
@@ -528,10 +517,20 @@ object MonitorReplay {
     * (processAllAvailable between adds) — for replays that must pin
     * CROSS-BATCH state bridging, not just the within-batch fold.
     */
-  private def runStreamBatches[I: org.apache.spark.sql.Encoder, O: org.apache.spark.sql.Encoder](
+  private def runStreamBatches[I: Encoder, O: Encoder](
       spark: SparkSession,
       batches: Seq[Seq[I]],
-      mon: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.Dataset[O]): Seq[O] = {
+      mon: Dataset[I] => Dataset[O]): Seq[O] =
+    drain(spark, batches, mon)(_.as[O].collect().toSeq)
+
+  /** The one memory-sink harness: start `mon` over a MemoryStream, feed
+    * each of `batches` as one micro-batch, and `read` the sink table
+    * before the query stops and its view is dropped.
+    */
+  private def drain[I: Encoder, T](
+      spark: SparkSession,
+      batches: Seq[Seq[I]],
+      mon: Dataset[I] => Dataset[_])(read: DataFrame => T): T = {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[I]
     val name = s"graft_replay_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -543,7 +542,7 @@ object MonitorReplay {
         stream.addData(rows: _*)
         q.processAllAvailable()
       }
-      spark.table(name).as[O].collect().toSeq
+      read(spark.table(name))
     } finally {
       q.stop()
       spark.catalog.dropTempView(name)

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming Page–Hinkley mean-drift monitor (Page 1954's cumulative
@@ -23,63 +22,37 @@ import java.sql.Timestamp
   *
   * As in [[CusumMonitor]], μ/δ/λ are CALLER-SUPPLIED reference
   * parameters fitted on the batch side — a stream cannot use the
-  * in-sample mean it hasn't seen yet. Event-time day rollover within
-  * the sorted micro-batch keeps emission deterministic under replay;
-  * days arriving out of order across batches are trusted to the ingest
-  * edge's ordering (the TransitionMonitor caveat class). State is one
-  * small case class per type.
+  * in-sample mean it hasn't seen yet. Days close by the day-count rules
+  * on [[WindowedMonitor]] (a late day reopens rather than clamps; the
+  * loop is [[DailyCounts]]). State is one small case class per type.
   */
 object PageHinkleyMonitor {
 
-  final case class Ev(event_type: String, ts: Timestamp)
+  final case class Ev(event_type: String, ts: Timestamp) extends TypedEvent
   final case class PhState(
       day: Long, n: Long,
       mUp: Double, minUp: Double, mDown: Double, minDown: Double)
+      extends DayCount
   final case class DayRow(
       event_type: String, day: Long, n: Long,
       ph_up: Double, ph_down: Double, alarm: Boolean)
-
-  private val DayMs = 86400000L
 
   def monitor(
       events: Dataset[Ev],
       mu: Double,
       delta: Double,
       lambda: Double): Dataset[DayRow] = {
-    implicit val stateEnc = Encoders.product[PhState]
-    implicit val outEnc = Encoders.product[DayRow]
-    events
-      .groupByKey(_.event_type)(Encoders.STRING)
-      .flatMapGroupsWithState[PhState, DayRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (tpe: String, batch: Iterator[Ev], state: GroupState[PhState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(
-              PhState(sorted.head.ts.getTime / DayMs, 0L, 0.0, 0.0, 0.0, 0.0))
-            val out = scala.collection.mutable.ArrayBuffer.empty[DayRow]
-            def close(c: Long, day: Long, s: PhState): PhState = {
-              // the empty prefix m_0 = 0 participates in the minimum —
-              // the state's mins start at 0 and only ever decrease
-              val mu2 = s.mUp + (c - mu - delta)
-              val mnU = math.min(s.minUp, mu2)
-              val md2 = s.mDown + (mu - c - delta)
-              val mnD = math.min(s.minDown, md2)
-              out += DayRow(tpe, day, c, mu2 - mnU, md2 - mnD,
-                mu2 - mnU > lambda || md2 - mnD > lambda)
-              s.copy(mUp = mu2, minUp = mnU, mDown = md2, minDown = mnD)
-            }
-            sorted.foreach { e =>
-              val d = e.ts.getTime / DayMs
-              if (d != st.day) {
-                val closed = close(st.n, st.day, st)
-                st = closed.copy(day = d, n = 1L)
-              } else st = st.copy(n = st.n + 1)
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    DailyCounts[Ev, PhState, DayRow](events, PhState(0L, 0L, 0.0, 0.0, 0.0, 0.0))(
+        (s, d, n) => s.copy(day = d, n = n)) { (tpe, s) =>
+      // the empty prefix m_0 = 0 participates in the minimum —
+      // the state's mins start at 0 and only ever decrease
+      val mu2 = s.mUp + (s.n - mu - delta)
+      val mnU = math.min(s.minUp, mu2)
+      val md2 = s.mDown + (mu - s.n - delta)
+      val mnD = math.min(s.minDown, md2)
+      (DayRow(tpe, s.day, s.n, mu2 - mnU, md2 - mnD,
+        mu2 - mnU > lambda || md2 - mnD > lambda),
+        s.copy(mUp = mu2, minUp = mnU, mDown = md2, minDown = mnD))
+    }
   }
 }

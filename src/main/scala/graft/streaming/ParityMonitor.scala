@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming demographic-parity monitor — the live twin of
@@ -34,10 +33,11 @@ import java.sql.Timestamp
 object ParityMonitor {
 
   final case class Decision(source: String, ts: Timestamp, group: String, pred: Boolean)
+      extends SourceEvent
 
   final case class ParityState(
       win: Long, n: Seq[Long], nPred: Seq[Long],
-      cumN: Seq[Long], cumNPred: Seq[Long])
+      cumN: Seq[Long], cumNPred: Seq[Long]) extends InWindow
 
   final case class WinRow(
       source: String, window_start: Long, n_events: Long,
@@ -80,50 +80,25 @@ object ParityMonitor {
     val names: IndexedSeq[String] = groups.toIndexedSeq :+ OtherGroup
     val slots = names.size
     val index: Map[String, Int] = names.zipWithIndex.toMap
-    implicit val stateEnc = Encoders.product[ParityState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[ParityState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Decision], state: GroupState[ParityState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            val zero = Vector.fill(slots)(0L)
-            var st = state.getOption.getOrElse(
-              ParityState(sorted.head.ts.getTime / windowMs, zero, zero, zero, zero))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: ParityState): Unit = {
-              val total = s.n.sum
-              if (total > 0) {
-                val (gap, maxG, minG) = gapOf(names, s.n, s.nPred)
-                val (cumGap, _, _) = gapOf(names, s.cumN, s.cumNPred)
-                out += WinRow(src, s.win * windowMs, total,
-                  s.n.count(_ > 0).toLong, gap, maxG, minG, cumGap,
-                  gap >= gapCeilingBp)
-              }
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = ParityState(w, zero, zero, st.cumN, st.cumNPred)
-              }
-              val i = index.getOrElse(e.group, slots - 1)
-              val p = if (e.pred) 1L else 0L
-              st = st.copy(
-                n = st.n.updated(i, st.n(i) + 1L),
-                nPred = st.nPred.updated(i, st.nPred(i) + p),
-                cumN = st.cumN.updated(i, st.cumN(i) + 1L),
-                cumNPred = st.cumNPred.updated(i, st.cumNPred(i) + p))
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    val zero = Vector.fill(slots)(0L)
+    WindowedMonitor[Decision, ParityState, WinRow](events, windowMs)(
+      open = w => ParityState(w, zero, zero, zero, zero),
+      step = (st, e) => {
+        val i = index.getOrElse(e.group, slots - 1)
+        val p = if (e.pred) 1L else 0L
+        st.copy(
+          n = st.n.updated(i, st.n(i) + 1L),
+          nPred = st.nPred.updated(i, st.nPred(i) + p),
+          cumN = st.cumN.updated(i, st.cumN(i) + 1L),
+          cumNPred = st.cumNPred.updated(i, st.cumNPred(i) + p))
+      },
+      emit = (src, s) => {
+        val (gap, maxG, minG) = gapOf(names, s.n, s.nPred)
+        val (cumGap, _, _) = gapOf(names, s.cumN, s.cumNPred)
+        Some(WinRow(src, s.win * windowMs, s.n.sum,
+          s.n.count(_ > 0).toLong, gap, maxG, minG, cumGap,
+          gap >= gapCeilingBp))
+      },
+      carry = (s, w) => ParityState(w, zero, zero, s.cumN, s.cumNPred))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming precision/recall monitor at the SHIPPED threshold — the
@@ -27,10 +26,11 @@ object PrecisionMonitor extends Serializable {
 
   final case class Scored(
       source: String, ts: Timestamp, num: Long, den: Long, label: Boolean)
+      extends SourceEvent
 
   final case class ConfState(
       win: Long, tp: Long, fp: Long, fn: Long, tn: Long,
-      ctp: Long, cfp: Long, cfn: Long, ctn: Long)
+      ctp: Long, cfp: Long, cfn: Long, ctn: Long) extends InWindow
 
   final case class WinRow(
       source: String, window_start: Long, n_events: Long,
@@ -60,54 +60,23 @@ object PrecisionMonitor extends Serializable {
     def bp(num: Long, den: Long): Option[Long] =
       if (den > 0) Some(math.floor(num.toDouble / den.toDouble * 10000 + 0.5).toLong)
       else None
-    implicit val stateEnc = Encoders.product[ConfState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[ConfState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Scored], state: GroupState[ConfState]) =>
-          val sorted = batch.toSeq
-            .filter(e => e.den > 0)
-            .sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(ConfState(
-              sorted.head.ts.getTime / windowMs, 0, 0, 0, 0, 0, 0, 0, 0))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: ConfState): Unit = {
-              val n = s.tp + s.fp + s.fn + s.tn
-              if (n > 0) {
-                val p = bp(s.tp, s.tp + s.fp)
-                val r = bp(s.tp, s.tp + s.fn)
-                val f1 = bp(2 * s.tp, 2 * s.tp + s.fp + s.fn)
-                out += WinRow(src, s.win * windowMs, n, s.tp, s.fp, s.fn,
-                  p, r, f1,
-                  p.exists(_ < precisionFloorBp) || r.exists(_ < recallFloorBp))
-              }
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = ConfState(w, 0, 0, 0, 0, st.ctp, st.cfp, st.cfn, st.ctn)
-              }
-              val pred = predictedPositive(e.num, e.den)
-              st =
-                if (pred && e.label)
-                  st.copy(tp = st.tp + 1, ctp = st.ctp + 1)
-                else if (pred && !e.label)
-                  st.copy(fp = st.fp + 1, cfp = st.cfp + 1)
-                else if (!pred && e.label)
-                  st.copy(fn = st.fn + 1, cfn = st.cfn + 1)
-                else st.copy(tn = st.tn + 1, ctn = st.ctn + 1)
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    WindowedMonitor[Scored, ConfState, WinRow](events.filter(_.den > 0), windowMs)(
+      open = w => ConfState(w, 0, 0, 0, 0, 0, 0, 0, 0),
+      step = (st, e) => {
+        val pred = predictedPositive(e.num, e.den)
+        if (pred && e.label) st.copy(tp = st.tp + 1, ctp = st.ctp + 1)
+        else if (pred && !e.label) st.copy(fp = st.fp + 1, cfp = st.cfp + 1)
+        else if (!pred && e.label) st.copy(fn = st.fn + 1, cfn = st.cfn + 1)
+        else st.copy(tn = st.tn + 1, ctn = st.ctn + 1)
+      },
+      emit = (src, s) => {
+        val p = bp(s.tp, s.tp + s.fp)
+        val r = bp(s.tp, s.tp + s.fn)
+        val f1 = bp(2 * s.tp, 2 * s.tp + s.fp + s.fn)
+        Some(WinRow(src, s.win * windowMs, s.tp + s.fp + s.fn + s.tn,
+          s.tp, s.fp, s.fn, p, r, f1,
+          p.exists(_ < precisionFloorBp) || r.exists(_ < recallFloorBp)))
+      },
+      carry = (s, w) => ConfState(w, 0, 0, 0, 0, s.ctp, s.cfp, s.cfn, s.ctn))
   }
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import java.sql.Timestamp
+import org.apache.spark.sql.Dataset
 
 /** Streaming numeric score-drift monitor — the live twin of
   * [[graft.operators.Quality.scoreDrift]]: scored events arriving per
@@ -30,21 +28,15 @@ import java.sql.Timestamp
   */
 object ScoreDriftMonitor extends Serializable {
 
-  final case class Scored(source: String, ts: Timestamp, value: Double)
-
-  final case class HistState(win: Long, counts: Seq[Long], cumCounts: Seq[Long])
+  type Scored = ScoreHistogram.Scored
+  val Scored = ScoreHistogram.Scored
 
   final case class WinRow(
       source: String, window_start: Long, n_events: Long,
       psi: Double, cum_psi: Double, alarm: Boolean)
 
-  /** The batch operator's bin draw: the first cut the value is below,
-    * else the last bin (cuts are the B−1 ascending reference quantiles). */
-  def binOf(v: Double, cuts: Seq[Double]): Int = {
-    var i = 0
-    while (i < cuts.length && !(v < cuts(i))) i += 1
-    i
-  }
+  /** The batch operator's bin draw, [[ScoreHistogram.binOf]]. */
+  def binOf(v: Double, cuts: Seq[Double]): Int = ScoreHistogram.binOf(v, cuts)
 
   private def round4(v: Double): Double =
     BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -56,14 +48,6 @@ object ScoreDriftMonitor extends Serializable {
       psiCeiling: Double,
       windowMs: Long = 3600000L): Dataset[WinRow] = {
     val bins = refCounts.length
-    require(bins > 1 && cuts.length == bins - 1,
-      "need B >= 2 reference bins and B-1 cutpoints")
-    require(cuts.zip(cuts.tail).forall { case (a, b) => a <= b },
-      "cutpoints must be non-decreasing")
-    require(refCounts.forall(_ >= 0) && refCounts.sum > 0,
-      "reference histogram must be non-negative with positive mass")
-    require(psiCeiling > 0 && windowMs > 0, "positive ceiling and window")
-    val cutsArr = cuts.toArray
     // add-1 smoothed reference probabilities, precomputed once: the
     // batch operator's pr = (cr + 1) / (nr + bins)
     val nr = refCounts.sum
@@ -82,45 +66,10 @@ object ScoreDriftMonitor extends Serializable {
       }
       round4(s)
     }
-    implicit val stateEnc = Encoders.product[HistState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[HistState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Scored], state: GroupState[HistState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            val zero = Vector.fill(bins)(0L)
-            var st = state.getOption.getOrElse(
-              HistState(sorted.head.ts.getTime / windowMs, zero, zero))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: HistState): Unit = {
-              val n = s.counts.sum
-              if (n > 0) {
-                val p = psi(s.counts)
-                out += WinRow(src, s.win * windowMs, n, p, psi(s.cumCounts),
-                  p > psiCeiling)
-              }
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = HistState(w, zero, st.cumCounts)
-              }
-              val b = binOf(e.value, cutsArr)
-              st = st.copy(
-                counts = st.counts.updated(b, st.counts(b) + 1L),
-                cumCounts = st.cumCounts.updated(b, st.cumCounts(b) + 1L))
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    ScoreHistogram.scored(events, cuts, refCounts, psiCeiling > 0, windowMs) {
+      (src, start, n, counts, cum) =>
+        val p = psi(counts)
+        WinRow(src, start, n, p, psi(cum), p > psiCeiling)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming sequential probability ratio test (Wald 1945) on a pass
@@ -34,8 +33,9 @@ import java.sql.Timestamp
 object SprtMonitor extends Serializable {
 
   final case class Trial(source: String, ts: Timestamp, pass: Boolean)
+      extends SourceEvent
 
-  final case class SprtState(win: Long, n: Long, k: Long)
+  final case class SprtState(win: Long, n: Long, k: Long) extends InWindow
 
   final case class WinRow(
       source: String, window_start: Long, n_trials: Long, n_pass: Long,
@@ -59,45 +59,20 @@ object SprtMonitor extends Serializable {
     val lower = math.log(beta / (1 - alpha))
     def llrOf(n: Long, k: Long): Double = k * wPass + (n - k) * wFail
     def round4(v: Double): Double = math.floor(v * 10000 + 0.5) / 10000
-    implicit val stateEnc = Encoders.product[SprtState]
-    implicit val outEnc = Encoders.product[WinRow]
-    trials
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[SprtState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[Trial], state: GroupState[SprtState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(
-              SprtState(sorted.head.ts.getTime / windowMs, 0L, 0L))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: SprtState): SprtState = {
-              if (s.n == 0) s
-              else {
-                val l = llrOf(s.n, s.k)
-                val decision =
-                  if (l >= upper) "reject_h0"
-                  else if (l <= lower) "accept_h0"
-                  else "continue"
-                out += WinRow(src, s.win * windowMs, s.n, s.k,
-                  round4(l), decision, decision == "reject_h0")
-                // a decided test is over — the monitor starts a new one
-                if (decision == "continue") s else s.copy(n = 0L, k = 0L)
-              }
-            }
-            sorted.foreach { t =>
-              val w = t.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) st = close(st).copy(win = w)
-              st = st.copy(n = st.n + 1,
-                k = if (t.pass) st.k + 1 else st.k)
-            }
-            state.update(st)
-            out.iterator
-          }
-      }
+    def decide(s: SprtState): String = {
+      val l = llrOf(s.n, s.k)
+      if (l >= upper) "reject_h0" else if (l <= lower) "accept_h0" else "continue"
+    }
+    WindowedMonitor[Trial, SprtState, WinRow](trials, windowMs)(
+      open = w => SprtState(w, 0L, 0L),
+      step = (st, t) => st.copy(n = st.n + 1, k = if (t.pass) st.k + 1 else st.k),
+      emit = (src, s) => {
+        val decision = decide(s)
+        Some(WinRow(src, s.win * windowMs, s.n, s.k,
+          round4(llrOf(s.n, s.k)), decision, decision == "reject_h0"))
+      },
+      // a decided test is over — the monitor starts a new one
+      carry = (s, w) =>
+        if (decide(s) == "continue") s.copy(win = w) else SprtState(w, 0L, 0L))
   }
 }

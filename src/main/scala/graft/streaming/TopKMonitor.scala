@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 import java.sql.Timestamp
 
 /** Streaming heavy-hitters monitor — the live twin of the
@@ -39,10 +38,11 @@ import java.sql.Timestamp
 object TopKMonitor {
 
   final case class KeyedEvent(source: String, ts: Timestamp, key: String)
+      extends SourceEvent
 
   final case class MgState(
       win: Long, n: Long, keys: Seq[String], counts: Seq[Long],
-      cumKeys: Seq[String], cumCounts: Seq[Long])
+      cumKeys: Seq[String], cumCounts: Seq[Long]) extends InWindow
 
   final case class WinRow(
       source: String, window_start: Long, n_events: Long, rank: Int,
@@ -76,51 +76,28 @@ object TopKMonitor {
     require(k > 0 && topM > 0 && topM <= k, "need 0 < topM <= k")
     require(minNovelShare >= 0.0 && minNovelShare <= 1.0, "share in [0,1]")
     require(windowMs > 0, "windowMs must be positive")
-    implicit val stateEnc = Encoders.product[MgState]
-    implicit val outEnc = Encoders.product[WinRow]
-    events
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState[MgState, WinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[KeyedEvent], state: GroupState[MgState]) =>
-          val sorted = batch.toSeq.sortBy(_.ts.getTime)
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(
-              MgState(sorted.head.ts.getTime / windowMs, 0L,
-                Vector.empty, Vector.empty, Vector.empty, Vector.empty))
-            val out = scala.collection.mutable.ArrayBuffer.empty[WinRow]
-            def close(s: MgState): Unit = if (s.n > 0) {
-              val ub = s.n / (k + 1)
-              val cum = s.cumKeys.zip(s.cumCounts).toMap
-              s.keys.zip(s.counts)
-                .sortBy { case (ky, c) => (-c, ky) }
-                .take(topM)
-                .zipWithIndex
-                .foreach { case ((ky, c), i) =>
-                  val novel = !expected.contains(ky)
-                  out += WinRow(src, s.win * windowMs, s.n, i + 1, ky, c,
-                    c + ub, cum.getOrElse(ky, 0L), novel,
-                    novel && c.toDouble / s.n >= minNovelShare)
-                }
-            }
-            sorted.foreach { e =>
-              val w = e.ts.getTime / windowMs
-              // an out-of-order event across micro-batches (w < st.win) CLAMPS into
-              // the current window: a close-and-reopen here would emit duplicate
-              // window_start rows and split one window's counts across two emissions
-              if (w > st.win) {
-                close(st)
-                st = MgState(w, 0L, Vector.empty, Vector.empty,
-                  st.cumKeys, st.cumCounts)
-              }
-              val (ks, cs) = mgUpdate(st.keys, st.counts, k, e.key)
-              val (cks, ccs) = mgUpdate(st.cumKeys, st.cumCounts, k, e.key)
-              st = MgState(st.win, st.n + 1L, ks, cs, cks, ccs)
-            }
-            state.update(st)
-            out.iterator
+    WindowedMonitor[KeyedEvent, MgState, WinRow](events, windowMs)(
+      open = w => MgState(w, 0L, Vector.empty, Vector.empty, Vector.empty, Vector.empty),
+      step = (st, e) => {
+        val (ks, cs) = mgUpdate(st.keys, st.counts, k, e.key)
+        val (cks, ccs) = mgUpdate(st.cumKeys, st.cumCounts, k, e.key)
+        MgState(st.win, st.n + 1L, ks, cs, cks, ccs)
+      },
+      emit = (src, s) => {
+        val ub = s.n / (k + 1)
+        val cum = s.cumKeys.zip(s.cumCounts).toMap
+        s.keys.zip(s.counts)
+          .sortBy { case (ky, c) => (-c, ky) }
+          .take(topM)
+          .zipWithIndex
+          .map { case ((ky, c), i) =>
+            val novel = !expected.contains(ky)
+            WinRow(src, s.win * windowMs, s.n, i + 1, ky, c,
+              c + ub, cum.getOrElse(ky, 0L), novel,
+              novel && c.toDouble / s.n >= minNovelShare)
           }
-      }
+      },
+      carry = (s, w) => MgState(w, 0L, Vector.empty, Vector.empty,
+        s.cumKeys, s.cumCounts))
   }
 }
