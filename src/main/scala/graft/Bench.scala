@@ -33,7 +33,7 @@ object Bench {
     * (~2/3 of its runtime by its own scaladoc); a deployment would pass
     * the xxhash64 bucket hash — identical semantics under any uniform
     * hash, no oracle. Benching both makes the gap a measured fact.
-    * (Also resolvable by name in [[graft.tools.Scratch]].)
+    * (Also resolvable by name in [[graft.tools.TimeQuery]].)
     */
   private[graft] val benchOnly: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
     "q116_importance_weights_xxh" -> ((s: SparkSession, dir: String) => {

@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import com.fasterxml.jackson.core.{JsonEncoding, JsonFactory, JsonFactoryBuilder, JsonParser, JsonToken, StreamReadFeature}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
@@ -184,7 +186,7 @@ object ExprKernels {
     * remixing keeps the k families independent; naive consecutive-integer
     * seeding measurably biased the Jaccard estimator (5/16 agreement on a
     * J=0.6 pair), so the mixer quality is load-bearing — validated unbiased
-    * via the 500-pair agreement check in tools/Scratch.
+    * by a 500-pair agreement check.
     */
   def minhash(arr: ArrayData, numHashes: Int): ArrayData = {
     val mins = Array.fill(numHashes)(Long.MaxValue)
@@ -251,6 +253,146 @@ object ExprKernels {
         case _ => null
       }
     } catch { case _: Exception => null }
+  }
+
+  // ------------------------------------------------------------ wire parse
+
+  val MalformedJson: UTF8String = UTF8String.fromString("malformed_json")
+  val MissingCreated: UTF8String = UTF8String.fromString("missing_created")
+
+  // `mapper`'s strict reading of JSON, plus duplicate-key detection: a
+  // record that repeats a key (at any depth) takes the tree path below
+  @transient private lazy val wireFactory =
+    new JsonFactoryBuilder().enable(StreamReadFeature.STRICT_DUPLICATE_DETECTION).build()
+
+  /** One read of a JSON wire line (see [[ParseWire]] for the contract):
+    * `[created: Double, message, correlation_id, data_raw, reason]`.
+    * `created`, `message` and `correlation_id` follow `get_json_object`:
+    * the first non-null value of the top-level key, strings as their text,
+    * anything else as compact JSON, `created` then cast to double as
+    * `try_cast` does. `data_raw` is [[jsonDropKeys]]`(input, drop)`,
+    * written only when `withData`; `message`/`correlation_id` are read only
+    * when `promote`. Never throws: bytes that are not UTF-8, and whatever
+    * Jackson rejects (its depth and number-length limits included), are
+    * `malformed_json`.
+    */
+  def parseWire(
+      input: UTF8String, drop: Array[String], promote: Boolean, withData: Boolean): InternalRow = {
+    val out = new Array[Any](5)
+    // bytes that are not UTF-8 are not a JSON text (RFC 8259 §8.1)
+    if (input == null || !input.isValid) out(4) = MalformedJson
+    else {
+      val text = input.toString
+      val ok =
+        try scanWire(wireFactory, text, drop, promote, withData, out)
+        catch {
+          case _: Exception =>
+            // a duplicate key (or a malformed line): re-read without the
+            // detector; the tree keeps a repeated key's LAST value, as
+            // jsonDropKeys does, while the scan keeps the first non-null
+            java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], null)
+            try {
+              scanWire(mapper.getFactory, text, drop, promote, withData = false, out) && {
+                if (withData) out(3) = jsonDropKeys(input, drop)
+                true
+              }
+            } catch { case _: Exception => false }
+        }
+      if (!ok) {
+        java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], null)
+        out(4) = MalformedJson
+      } else if (out(0) == null) out(4) = MissingCreated
+    }
+    new GenericInternalRow(out)
+  }
+
+  /** Walks one top-level object; false when the document is not one. */
+  private def scanWire(
+      f: JsonFactory, text: String, drop: Array[String],
+      promote: Boolean, withData: Boolean, out: Array[Any]): Boolean = {
+    import JsonToken._
+    val p = f.createParser(text)
+    try {
+      if (p.nextToken() != START_OBJECT) return false
+      val sw = if (withData) new java.io.StringWriter(text.length) else null
+      val g = if (withData) f.createGenerator(sw) else null
+      if (g != null) g.writeStartObject()
+      var found = 0 // bit i: slot i has taken its first non-null value
+      var t = p.nextToken()
+      while (t == FIELD_NAME) {
+        val name = p.currentName()
+        t = p.nextToken()
+        val slot =
+          if (name == "created") 0
+          else if (promote && name == "message") 1
+          else if (promote && name == "correlation_id") 2
+          else -1
+        if (slot >= 0 && (found & (1 << slot)) == 0 && t != VALUE_NULL) {
+          found |= 1 << slot
+          out(slot) = if (slot == 0) createdOf(p, t) else renderedOf(f, p, t)
+        } else if (g == null || drop.contains(name)) p.skipChildren()
+        else {
+          g.writeFieldName(name)
+          g.copyCurrentStructure(p)
+        }
+        t = p.nextToken()
+      }
+      if (g != null) {
+        g.writeEndObject()
+        g.close()
+        out(3) = UTF8String.fromString(sw.toString)
+      }
+      true
+    } finally p.close()
+  }
+
+  /** `try_cast(get_json_object(_, '$.created') AS DOUBLE)`, null unless
+    * finite (`timestamp_seconds` has no time for NaN or infinity). */
+  private def createdOf(p: JsonParser, t: JsonToken): Any = {
+    import JsonToken._
+    val d: Any = t match {
+      case VALUE_STRING =>
+        val s = p.getText
+        try java.lang.Double.parseDouble(s)
+        catch {
+          case _: NumberFormatException =>
+            Cast.processFloatingPointSpecialLiterals(s, false)
+        }
+      case VALUE_NUMBER_INT | VALUE_NUMBER_FLOAT => p.getDoubleValue
+      case _ => p.skipChildren(); null
+    }
+    d match {
+      case x: Double if !x.isNaN && !x.isInfinite => x
+      case _ => null
+    }
+  }
+
+  /** `get_json_object`'s text of the current value, as its UTF-8
+    * generator writes it: a string's own text (null if it holds an unpaired
+    * surrogate, which that generator refuses), anything else compact JSON. */
+  private def renderedOf(f: JsonFactory, p: JsonParser, t: JsonToken): UTF8String =
+    if (t == JsonToken.VALUE_STRING) {
+      val s = p.getText
+      if (unpairedSurrogate(s)) null else UTF8String.fromString(s)
+    } else {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val g = f.createGenerator(bytes, JsonEncoding.UTF8)
+      g.copyCurrentStructure(p)
+      g.close()
+      UTF8String.fromBytes(bytes.toByteArray)
+    }
+
+  private def unpairedSurrogate(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (Character.isHighSurrogate(c)) {
+        if (i + 1 >= s.length || !Character.isLowSurrogate(s.charAt(i + 1))) return true
+        i += 2
+      } else if (Character.isLowSurrogate(c)) return true
+      else i += 1
+    }
+    false
   }
 
   // -------------------------------------------------------- hyperplane LSH

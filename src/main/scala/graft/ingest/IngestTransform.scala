@@ -2,12 +2,11 @@ package graft.ingest
 
 import graft.functions.JsonFunctions
 import graft.model.IngestConfig
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType}
 
 /** The pure `DataFrame => DataFrame` ingest pipeline: raw JSON wire records
-  * in, partition-ready `logs` envelope rows out.
+  * in, partition-ready `logs` envelope rows and dead letters out.
   *
   * Re-expresses the reference's ingest dataflow
   * (reference: venus/db/write.py:19-62) as a single declarative Spark
@@ -22,22 +21,59 @@ import org.apache.spark.sql.types.{MapType, StringType}
   *   5. add a `date` partition column — the hypertable chunk-routing
   *      equivalent (reference: migration:39-43)
   *
-  * Everything is built from codegen'd built-ins (from_json, map_filter,
-  * to_json, timestamp_seconds) — no UDFs — so the whole transform stays
-  * inside WholeStageCodegen and scales linearly with partitions.
+  * Steps 1–4 are ONE read of each line, as the reference's one
+  * `json.loads` is: the codegen'd [[graft.functions.ParseWire]] kernel
+  * (Jackson, no UDF) yields `created`, `message`, `correlation_id`, the
+  * popped payload and a dead-letter `reason` together. [[parse]] is that
+  * read; [[logs]] and [[dead]] are projections of it, so a persisted parse
+  * feeds both sinks ([[graft.streaming.StreamIngest]]). The rest is
+  * built-ins: `timestamp_seconds`, `lower` and `to_date`. Every line lands
+  * in exactly one of the two outputs.
   */
 object IngestTransform {
 
   /** Name of the input column holding the raw JSON wire record. */
   val RawCol = "value"
 
-  /** Parses the payload as a string-keyed map: key-preserving (unlike an
-    * ascribed StructType, unknown keys survive) and exact for the
-    * "pop fields, keep the rest" semantics. Values are re-serialized JSON
-    * scalars/objects; `valueType = StringType` keeps raw text, so we parse
-    * values with a second pass only where typed access is needed.
+  /** The one read of each line, with the ignore-list of `config` popped:
+    * `time TIMESTAMP, message STRING, correlation_id STRING,
+    * data_raw STRING, reason STRING, raw STRING`. `reason` is null on a
+    * good row; `raw` (the line itself) is kept only on dead rows.
     */
-  private val payloadMapType = MapType(StringType, StringType)
+  def parse(raw: DataFrame, config: IngestConfig = IngestConfig()): DataFrame =
+    parsed(raw, (config.dropFields ++ IngestConfig.PromotedFields).distinct,
+      promote = true, withData = true)
+
+  /** [[parse]] with the kernel's switches exposed: `drop` (popped keys),
+    * `promote` (read `message` and `correlation_id`), `withData` (write
+    * `data_raw`). */
+  private[ingest] def parsed(
+      raw: DataFrame, drop: Seq[String], promote: Boolean, withData: Boolean): DataFrame = {
+    val w = raw.select(
+      JsonFunctions.parse_wire(col(RawCol), drop, promote, withData).as("w"), col(RawCol))
+    w.select(
+      // `created` is an epoch-seconds float (reference: write.py:41):
+      // timestamp_seconds keeps the fractional part
+      timestamp_seconds(col("w.created")).as("time"),
+      col("w.message").as("message"),
+      lower(col("w.correlation_id")).as("correlation_id"),
+      col("w.data_raw").as("data_raw"),
+      col("w.reason").as("reason"),
+      when(col("w.reason").isNotNull, col(RawCol)).as("raw"))
+  }
+
+  /** The good rows of a [[parse]]: `time TIMESTAMP, message STRING,
+    * correlation_id STRING, data_raw STRING, date DATE`. */
+  def logs(parsed: DataFrame): DataFrame =
+    parsed.filter(col("reason").isNull)
+      .select(col("time"), col("message"), col("correlation_id"), col("data_raw"),
+        to_date(col("time")).as("date"))
+
+  /** The dead rows of a parse: `raw STRING, reason STRING`, where reason
+    * is `malformed_json` (reference: write.py:34-36) or `missing_created`
+    * (reference: write.py:42-44). */
+  def dead(parsed: DataFrame): DataFrame =
+    parsed.filter(col("reason").isNotNull).select(col("raw"), col("reason"))
 
   /** Full transform: raw JSON strings -> logs envelope.
     *
@@ -49,43 +85,11 @@ object IngestTransform {
     * use [[deadLetter]] on the same input to route them to a side sink
     * (reference drops them with a log line, write.py:34-36,42-44).
     */
-  def apply(raw: DataFrame, config: IngestConfig = IngestConfig()): DataFrame = {
-    val removed = (config.dropFields ++ IngestConfig.PromotedFields).distinct
-    raw
-      // A5: extract + coerce. `created` is an epoch-seconds float
-      // (reference: write.py:41) — timestamp_seconds keeps fractional part.
-      .withColumn("time", timestamp_seconds(try_cast_double(get_json_object(col(RawCol), "$.created"))))
-      .withColumn("message", get_json_object(col(RawCol), "$.message"))
-      .withColumn("correlation_id", lower(get_json_object(col(RawCol), "$.correlation_id")))
-      // A6: mandatory-field filter (drops unparseable rows too: time is null).
-      .filter(col("time").isNotNull)
-      // A7: pop promoted + ignore-list keys from the payload, preserving the
-      // remaining fields' JSON types exactly (reference pop semantics,
-      // write.py:41-52; type fidelity asserted by test_sender.py:133-136).
-      .withColumn("data_raw", JsonFunctions.json_drop_keys(col(RawCol), removed))
-      .withColumn("date", to_date(col("time")))
-      .select("time", "message", "correlation_id", "data_raw", "date")
-  }
+  def apply(raw: DataFrame, config: IngestConfig = IngestConfig()): DataFrame =
+    logs(parse(raw, config))
 
-  /** ANSI-safe string->double (malformed -> NULL, not error). */
-  private def try_cast_double(c: Column): Column = c.try_cast("double")
-
-  /** Rows the main transform drops, for a dead-letter sink: malformed JSON
-    * (reference: write.py:34-36) and records without `created`
-    * (reference: write.py:42-44), each tagged with a reason.
-    */
-  def deadLetter(raw: DataFrame): DataFrame = {
-    // from_json in PERMISSIVE mode yields NULL for unparseable documents,
-    // matching the reference's dead-letter condition.
-    val parsed = from_json(col(RawCol), payloadMapType)
-    raw
-      .withColumn(
-        "reason",
-        when(parsed.isNull, lit("malformed_json"))
-          .when(try_cast_double(get_json_object(col(RawCol), "$.created")).isNull,
-            lit("missing_created"))
-      )
-      .filter(col("reason").isNotNull)
-      .select(col(RawCol).as("raw"), col("reason"))
-  }
+  /** Rows the main transform drops, for a dead-letter sink, each tagged
+    * with a reason (see [[dead]]). Reads only what the reason needs. */
+  def deadLetter(raw: DataFrame): DataFrame =
+    dead(parsed(raw, Nil, promote = false, withData = false))
 }

@@ -1,6 +1,5 @@
 package graft.ingest
 
-import graft.functions.JsonFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -11,25 +10,30 @@ import org.apache.spark.sql.functions._
   * Same wire shape as logs ingest (epoch-seconds `created` in the JSON
   * payload) but a leaner envelope: no message/correlation promotion — just
   * time extraction, created popped from the payload, and the date partition
-  * column for chunk-equivalent pruning. Dashboard aggregation over the
-  * result is `window()`/`groupBy(date)` + `get_json_object`/`variant_get`
-  * on `data_raw` (reference: metabase-instructions.rst:18-22 line charts).
+  * column for chunk-equivalent pruning. It is the same one-read kernel as
+  * [[IngestTransform]] with only `created` read and popped, so
+  * [[IngestTransform.dead]] of [[parse]] is the stream's dead-letter
+  * output. Dashboard aggregation over the result is
+  * `window()`/`groupBy(date)` + `get_json_object`/`variant_get` on
+  * `data_raw` (reference: metabase-instructions.rst:18-22 line charts).
   */
 object MetricIngest {
 
   val RawCol = "value"
+
+  /** The one read of each line (columns as [[IngestTransform.parse]]). */
+  def parse(raw: DataFrame): DataFrame =
+    IngestTransform.parsed(raw, Seq("created"), promote = false, withData = true)
+
+  /** The good rows of a [[parse]]: `time TIMESTAMP, data_raw STRING, date DATE`. */
+  def rows(parsed: DataFrame): DataFrame =
+    parsed.filter(col("reason").isNull)
+      .select(col("time"), col("data_raw"), to_date(col("time")).as("date"))
 
   /** Raw JSON wire records -> metric envelope:
     * `time TIMESTAMP, data_raw STRING, date DATE`.
     * Malformed / `created`-less records are dropped here (dead-letter them
     * with [[IngestTransform.deadLetter]] on the same input).
     */
-  def apply(raw: DataFrame): DataFrame =
-    raw
-      .withColumn("time",
-        timestamp_seconds(get_json_object(col(RawCol), "$.created").try_cast("double")))
-      .filter(col("time").isNotNull)
-      .withColumn("data_raw", JsonFunctions.json_drop_keys(col(RawCol), Seq("created")))
-      .withColumn("date", to_date(col("time")))
-      .select("time", "data_raw", "date")
+  def apply(raw: DataFrame): DataFrame = rows(parse(raw))
 }

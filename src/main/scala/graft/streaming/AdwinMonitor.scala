@@ -29,7 +29,8 @@ import java.sql.Timestamp
   * [[DailyCounts]]. Two of those rules weigh more here than for the
   * fixed-reference monitors: a quiet type holds its last day, and its
   * state, indefinitely, which also delays ADWIN's adaptive cut decision;
-  * and a late day reopens (closing the open day) instead of clamping.
+  * and a late day's event clamps into the open day, so the window never
+  * takes a day out of order.
   */
 object AdwinMonitor {
 

@@ -15,8 +15,8 @@ import java.sql.Timestamp
   * it hasn't seen yet — that difference is the point of the pairing, and
   * the batch operator is where the reference gets fitted.
   *
-  * Days close by the day-count rules on [[WindowedMonitor]] (a late day
-  * reopens rather than clamps; the loop is [[DailyCounts]]). State is
+  * Days close by the day-count rules on [[WindowedMonitor]] (a late day's
+  * event clamps into the open day; the loop is [[DailyCounts]]). State is
   * one small case class per type.
   */
 object CusumMonitor {

@@ -19,12 +19,13 @@ private[streaming] trait DayCount {
 }
 
 /** The day loop of the day-count monitors: count each event type's
-  * events per event-time day and, when an event of another day arrives,
+  * events per event-time day and, when an event of a LATER day arrives,
   * close the open day through the monitor's `close` (one row, and the
-  * state its sums carry) and reopen on the new day. Unlike
-  * [[WindowedMonitor]]'s clamp, an event of an EARLIER day also closes
-  * the open day and opens its own. `at(s, day, n)` sets a state's day
-  * and count.
+  * state its sums carry) and open the new day. An event of an EARLIER
+  * day — which only a later micro-batch can deliver — clamps into the
+  * open day, as [[WindowedMonitor]] clamps a late event: each day is
+  * emitted once, with its count whole, and the sums fold days in order.
+  * `at(s, day, n)` sets a state's day and count.
   */
 private[streaming] object DailyCounts {
 
@@ -46,7 +47,7 @@ private[streaming] object DailyCounts {
             val out = ArrayBuffer.empty[O]
             sorted.foreach { e =>
               val d = e.ts.getTime / DayMs
-              if (d != st.day) {
+              if (d > st.day) {
                 val (row, closed) = close(tpe, st)
                 out += row
                 st = at(closed, d, 1L)

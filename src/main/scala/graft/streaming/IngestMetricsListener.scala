@@ -11,6 +11,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *
   * Attach with `spark.streams.addListener(listener)`; scope to one query
   * by filtering on `queryId`.
+  *
+  * Memory is bounded: running totals cover every batch ever seen
+  * ([[totalRows]], [[meanRate]]), while [[metrics]] keeps only the last
+  * [[IngestMetricsListener.Kept]] batches — a live stream reports progress
+  * for as long as it runs.
   */
 final class IngestMetricsListener extends StreamingQueryListener {
 
@@ -18,7 +23,11 @@ final class IngestMetricsListener extends StreamingQueryListener {
   final case class BatchMetric(
       queryId: java.util.UUID, batchId: Long, rows: Long, durationMs: Long)
 
-  private val buf = new java.util.concurrent.ConcurrentLinkedQueue[BatchMetric]()
+  // guarded by `this`
+  private val recent = new java.util.ArrayDeque[BatchMetric]()
+  private var rows = 0L
+  private var busyRows = 0L
+  private var busyMs = 0L
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
@@ -27,23 +36,36 @@ final class IngestMetricsListener extends StreamingQueryListener {
     val p = e.progress
     val duration = Option(p.durationMs.get("triggerExecution"))
       .map(_.longValue()).getOrElse(0L)
-    buf.add(BatchMetric(p.id, p.batchId, p.numInputRows, duration))
+    val m = BatchMetric(p.id, p.batchId, p.numInputRows, duration)
+    synchronized {
+      recent.addLast(m)
+      if (recent.size > IngestMetricsListener.Kept) recent.removeFirst()
+      rows += m.rows
+      if (m.rows > 0 && m.durationMs > 0) {
+        busyRows += m.rows
+        busyMs += m.durationMs
+      }
+    }
   }
 
-  /** Snapshot of captured batches (completed triggers only). */
-  def metrics: Seq[BatchMetric] = {
-    val it = buf.iterator()
+  /** The last [[IngestMetricsListener.Kept]] completed triggers, oldest first. */
+  def metrics: Seq[BatchMetric] = synchronized {
     val out = Seq.newBuilder[BatchMetric]
-    while (it.hasNext) out += it.next()
+    recent.forEach(m => out += m)
     out.result()
   }
 
-  def totalRows: Long = metrics.map(_.rows).sum
+  /** Rows over every batch seen. */
+  def totalRows: Long = synchronized(rows)
 
-  /** Mean ingest rate in rows/sec over batches that moved data. */
-  def meanRate: Double = {
-    val busy = metrics.filter(m => m.rows > 0 && m.durationMs > 0)
-    if (busy.isEmpty) 0.0
-    else busy.map(_.rows).sum.toDouble / (busy.map(_.durationMs).sum / 1000.0)
+  /** Mean ingest rate in rows/sec over every batch that moved data. */
+  def meanRate: Double = synchronized {
+    if (busyMs == 0L) 0.0 else busyRows.toDouble / (busyMs / 1000.0)
   }
+}
+
+object IngestMetricsListener {
+
+  /** How many recent batches [[IngestMetricsListener.metrics]] keeps. */
+  val Kept = 1024
 }

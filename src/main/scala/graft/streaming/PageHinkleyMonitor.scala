@@ -23,8 +23,8 @@ import java.sql.Timestamp
   * As in [[CusumMonitor]], μ/δ/λ are CALLER-SUPPLIED reference
   * parameters fitted on the batch side — a stream cannot use the
   * in-sample mean it hasn't seen yet. Days close by the day-count rules
-  * on [[WindowedMonitor]] (a late day reopens rather than clamps; the
-  * loop is [[DailyCounts]]). State is one small case class per type.
+  * on [[WindowedMonitor]] (a late day's event clamps into the open day;
+  * the loop is [[DailyCounts]]). State is one small case class per type.
   */
 object PageHinkleyMonitor {
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ingest.IngestTransform
+import graft.ingest.{IngestTransform, MetricIngest}
 import graft.model.IngestConfig
 import graft.store.LogStore
 import org.apache.spark.sql.DataFrame
@@ -23,8 +23,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    ([[LogStore.appendIdempotent]]), so a replayed epoch overwrites itself
   *    instead of re-appending — observably exactly-once into the file sink
   *    (strictly stronger than the reference).
-  *  - dead-letter of malformed records (reference: write.py:34-36)
-  *    -> side output via [[IngestTransform.deadLetter]] in the same batch.
+  *  - one `json.loads` per record, then pops (reference: write.py:34-52)
+  *    -> one read per record per epoch: the batch's [[IngestTransform.parse]]
+  *    (the codegen'd `parse_wire` kernel) is persisted, and the table rows
+  *    and the dead letters (reference: write.py:34-36) are both projections
+  *    of it; the raw line is kept only on dead rows.
   *  - graceful-shutdown final flush (reference: write.py:60-62)
   *    -> `StreamingQuery.stop()` completes the in-flight batch.
   *
@@ -66,12 +69,12 @@ object StreamIngest {
       sourceFlushGated: Boolean): StreamingQuery =
     startIngest(raw, store, checkpoint, configSource,
       writerId = "logs", table = "logs",
-      transform = (df, cfg) => IngestTransform(df, cfg),
+      parse = (df, cfg) => IngestTransform.parse(df, cfg), rows = IngestTransform.logs,
       availableNow = availableNow, sourceFlushGated = sourceFlushGated)
 
   /** Streaming ingest for the `metric` table (reference's second hypertable,
     * migration:66-78) — same trigger/checkpoint/idempotence contract as
-    * [[start]], leaner envelope ([[graft.ingest.MetricIngest]]).
+    * [[start]], leaner envelope ([[MetricIngest]]).
     */
   def startMetric(
       raw: DataFrame,
@@ -82,17 +85,17 @@ object StreamIngest {
       sourceFlushGated: Boolean = false): StreamingQuery =
     startIngest(raw, store, checkpoint, ConfigSource.Static(config),
       writerId = "metric", table = "metric",
-      transform = (df, _) => graft.ingest.MetricIngest(df),
+      parse = (df, _) => MetricIngest.parse(df), rows = MetricIngest.rows,
       availableNow = availableNow, sourceFlushGated = sourceFlushGated)
 
-  /** Shared batch lifecycle for every ingest stream: one persist of the raw
-    * micro-batch feeding both the table write and the dead-letter side
-    * output, both idempotent under the stream's own writer id — if the main
-    * write succeeds and the dead-letter write fails, the replayed epoch
-    * rewrites BOTH of its partition sets in place, no duplicates. The
-    * writer id also keeps concurrent streams (logs + metric) from
-    * overwriting each other's same-numbered epochs in the shared
-    * `dead_letter` table.
+  /** Shared batch lifecycle for every ingest stream: one persist of the
+    * micro-batch's parse (`parse`) feeding both the table write (`rows`)
+    * and the dead-letter side output, both idempotent under the stream's
+    * own writer id — if the main write succeeds and the dead-letter write
+    * fails, the replayed epoch rewrites BOTH of its partition sets in
+    * place, no duplicates. The writer id also keeps concurrent streams
+    * (logs + metric) from overwriting each other's same-numbered epochs in
+    * the shared `dead_letter` table.
     */
   private def startIngest(
       raw: DataFrame,
@@ -101,7 +104,8 @@ object StreamIngest {
       configSource: ConfigSource,
       writerId: String,
       table: String,
-      transform: (DataFrame, IngestConfig) => DataFrame,
+      parse: (DataFrame, IngestConfig) => DataFrame,
+      rows: DataFrame => DataFrame,
       availableNow: Boolean = false,
       sourceFlushGated: Boolean = false): StreamingQuery = {
     // AvailableNow = the catch-up/backfill mode: drain everything currently
@@ -132,12 +136,13 @@ object StreamIngest {
         // live-refresh point: the freshest config applies to THIS batch
         // (reference: settings.py:44-69 Consul hot-reload)
         val config = configSource.current()
-        val cached = batch.persist()
+        // the first write fills the cache: each line is parsed once
+        val parsed = parse(batch, config).persist()
         try {
-          store.appendIdempotent(table, transform(cached, config), writerId, batchId)
-          val dead = IngestTransform.deadLetter(cached)
+          store.appendIdempotent(table, rows(parsed), writerId, batchId)
+          val dead = IngestTransform.dead(parsed)
           if (!dead.isEmpty) store.appendIdempotent("dead_letter", dead, writerId, batchId)
-        } finally cached.unpersist()
+        } finally parsed.unpersist()
         ()
       }
       .start()

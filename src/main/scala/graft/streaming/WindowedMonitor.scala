@@ -46,9 +46,9 @@ private[streaming] trait InWindow {
   *     Misra–Gries fold depends on it).
   *
   * The day-count monitors ([[CusumMonitor]], [[PageHinkleyMonitor]],
-  * [[AdwinMonitor]]) follow the same rules except one: a late day REOPENS
-  * instead of clamping — the late event closes the open day and opens its
-  * own, so a day can be emitted more than once. They share [[DailyCounts]].
+  * [[AdwinMonitor]]) follow the same rules with the event-time day as the
+  * window, a late day's event included: it clamps into the open day, so
+  * no day is emitted twice. They share [[DailyCounts]].
   */
 private[streaming] object WindowedMonitor {
 

@@ -3,8 +3,8 @@ package graft.tools
 import graft.{SparkEntry, Tables}
 import org.apache.spark.sql.SparkSession
 
-/** Dev loop: time one registered query with warm-up + repeated passes,
-  * without the full Bench sweep.
+/** Dev loop: time one registered query — or a [[graft.Bench.benchOnly]]
+  * twin — with warm-up + repeated passes, without the full Bench sweep.
   * Usage: runMain graft.tools.TimeQuery <queryName> [sfDir] [passes]
   */
 object TimeQuery {
@@ -22,7 +22,9 @@ object TimeQuery {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables(spark, sfDir, "lineitem").count()
-    val fn = SparkEntry.queries(name)
+    val fn = SparkEntry.queries.get(name)
+      .orElse(graft.Bench.benchOnly.toMap.get(name))
+      .getOrElse(sys.error(s"unknown query: $name"))
     for (i <- 0 to passes) {
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
