@@ -347,7 +347,9 @@ object ExprKernels {
   }
 
   /** `try_cast(get_json_object(_, '$.created') AS DOUBLE)`, null unless
-    * finite (`timestamp_seconds` has no time for NaN or infinity). */
+    * `created × 10⁶` fits a Long: `timestamp_seconds` has no time for NaN
+    * or infinity, and saturates past ±2⁶³ microseconds (year ±294247)
+    * instead of failing. */
   private def createdOf(p: JsonParser, t: JsonToken): Any = {
     import JsonToken._
     val d: Any = t match {
@@ -362,10 +364,13 @@ object ExprKernels {
       case _ => p.skipChildren(); null
     }
     d match {
-      case x: Double if !x.isNaN && !x.isInfinite => x
+      case x: Double if x * 1e6 >= -TwoPow63 && x * 1e6 < TwoPow63 => x
       case _ => null
     }
   }
+
+  /** 2⁶³, the first double past Long.MaxValue. */
+  private val TwoPow63 = 9.223372036854775808e18
 
   /** `get_json_object`'s text of the current value, as its UTF-8
     * generator writes it: a string's own text (null if it holds an unpaired

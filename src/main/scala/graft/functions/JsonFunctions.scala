@@ -62,8 +62,9 @@ case class JsonDropKeys(child: Expression, keys: Seq[String])
   *  - `reason` is `malformed_json` when the line is not UTF-8, Jackson
   *    rejects it (its depth and number-length limits included) or its top
   *    level is not an object (content after the closing brace is not
-  *    read), else `missing_created` when `created` has no finite double,
-  *    else null. A row goes to the table exactly when `reason` is null.
+  *    read), else `missing_created` when `created` has no double whose
+  *    `× 10⁶` (its microseconds) fits a Long, else null. A row goes to
+  *    the table exactly when `reason` is null.
   *  - `created`, `message`, `correlation_id`: the first non-null value of
   *    the top-level key, as `get_json_object` finds it; `created` then cast
   *    as `try_cast(_ AS DOUBLE)` does. `message` and `correlation_id` are

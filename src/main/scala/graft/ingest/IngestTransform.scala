@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   *   1. JSON parse with dead-letter split  (reference: write.py:31-36)
   *   2. extract + coerce `created` -> time, `message`, `correlation_id`
   *      (reference: write.py:41-47)
-  *   3. drop records lacking `created`     (reference: write.py:42-44)
+  *   3. drop records lacking `created`     (reference: write.py:42-44),
+  *      or whose `created` has no time (NaN, infinity, or microseconds
+  *      past a Long)
   *   4. pop promoted keys + configured ignore-list from the payload
   *      (reference: write.py:51, settings.py:26-37)
   *   5. add a `date` partition column — the hypertable chunk-routing
@@ -53,7 +55,9 @@ object IngestTransform {
       JsonFunctions.parse_wire(col(RawCol), drop, promote, withData).as("w"), col(RawCol))
     w.select(
       // `created` is an epoch-seconds float (reference: write.py:41):
-      // timestamp_seconds keeps the fractional part
+      // timestamp_seconds keeps the fractional part; the kernel nulls a
+      // `created` whose microseconds do not fit a Long, where it would
+      // saturate, so such a line is `missing_created`
       timestamp_seconds(col("w.created")).as("time"),
       col("w.message").as("message"),
       lower(col("w.correlation_id")).as("correlation_id"),

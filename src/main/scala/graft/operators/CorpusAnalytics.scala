@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextAnalysis
+import graft.operators.BoundedCells.r4
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2679,13 +2680,10 @@ object CorpusAnalytics {
       lit(0L),
       (acc, i) => acc + size(array_distinct(slice(col("ts"), i + 1, lit(w)))))
     val nWin = (n - w + 1).cast("long")
-    // arithmetic rounding (floor(x*1e4 + 0.5)/1e4) instead of round():
-    // Spark's round() rounds the shortest DECIMAL representation half-up
-    // while DuckDB rounds the BINARY value, so a ratio landing exactly on
-    // x.xxxx5 in decimal (e.g. 527/800 = 0.65875, stored as 0.65874999...)
-    // rounds differently; the floor form is the same IEEE chain on both
-    // engines and can never disagree (values here are non-negative)
-    val r4 = (c: Column) => floor(c * 10000 + lit(0.5)) / 10000
+    // r4, not round(): Spark's round() rounds the shortest DECIMAL
+    // representation half-up while DuckDB rounds the BINARY value, so a
+    // ratio landing exactly on x.xxxx5 in decimal (e.g. 527/800 = 0.65875,
+    // stored as 0.65874999...) rounds differently
     docs
       .filter(col(textCol).isNotNull)
       .select(col(idCol), tokens(col(textCol)).as("ts"))
@@ -3167,7 +3165,6 @@ object CorpusAnalytics {
     val nS = when(col("n") > 0, col("n").cast("double")).otherwise(lit(1.0))
     val f1d = col("f1").cast("double")
     val f2d = col("f2").cast("double")
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     agg.select(col("v"), col("n"), col("f1"), col("f2"),
       when(col("n") > 0,
         floor(f1d / nS * 10000 + lit(0.5)).cast("long"))

@@ -180,7 +180,7 @@ private[graft] object GlobalRank {
       df: DataFrame,
       orderCol: String,
       weights: Seq[(String, String)],
-      localSpineLimit: Long = 1L << 18): (DataFrame, Seq[Long], DataFrame) = {
+      localSpineLimit: Long = BoundedCells.Limit): (DataFrame, Seq[Long], DataFrame) = {
     require(weights.nonEmpty, "need at least one (weightCol, outCol) pair")
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
@@ -204,9 +204,8 @@ private[graft] object GlobalRank {
     // keep ownership — we neither re-persist nor evict theirs.
     val inputOwned = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (inputOwned) df.persist()
-    // in-process tier (the percentileValues/screen-tier gate, applied at
-    // the primitive): while the histogram fits one driver page, collect
-    // it, sort by the order key, and fold the N running sums in-process —
+    // driver tier ([[BoundedCells]], applied at the primitive): sort the
+    // collected histogram by the order key and fold the N running sums —
     // prefix sums of longs are order-free exact integers, the driver sort
     // replicates the range partitioning's ascending-nulls-first order
     // (orderCol is unique per row by contract, so there is no tie
@@ -215,11 +214,9 @@ private[graft] object GlobalRank {
     // below (boundary sample + exchange + pinned copy + offsets collect +
     // WindowExec) exists for histograms too wide to collect; past the
     // gate it runs verbatim on the UNCHANGED plan.
-    val spineOrd =
-      if (localSpineLimit > 0) spineOrdering(df.schema(orderCol).dataType)
-      else None
-    val localRows = spineOrd.map(_ => df.head(localSpineLimit.toInt + 1))
-    if (localRows.isDefined && localRows.get.length <= localSpineLimit) {
+    val spineOrd = spineOrdering(df.schema(orderCol).dataType)
+    val localRows = spineOrd.flatMap(_ => BoundedCells.probe(df, localSpineLimit))
+    if (localRows.isDefined) {
       if (inputOwned) df.unpersist(false)
       val rows = localRows.get
       val ordIx = df.schema.fieldIndex(orderCol)
@@ -302,43 +299,22 @@ private[graft] object GlobalRank {
       valueCol: String,
       idCol: String,
       probs: Seq[Double],
-      localHistLimit: Long = 1L << 18): Option[Array[Double]] = {
+      localHistLimit: Long = BoundedCells.Limit): Option[Array[Double]] = {
     require(probs.nonEmpty && probs.forall(p => p >= 0 && p <= 1),
       "probs must be in [0, 1]")
     val hist = df.filter(col(valueCol).isNotNull)
       .select(col(valueCol).cast("double").as("_pl_v"))
       .groupBy(col("_pl_v")).agg(count(lit(1)).as("_pl_c"))
-    // in-process tier (the Quality screen-tier discipline): while the
-    // value histogram fits one driver page, collect it and read the
-    // positional values off a local sorted prefix — the distributed
+    // driver tier ([[BoundedCells]]): read the positional values off a
+    // local sorted prefix of the collected histogram — the distributed
     // form pays a full weightedPrefixSums pass (range sample + exchange
     // + window + offsets collect + pin) to locate 2·|probs| ranks in a
-    // frame of a few thousand rows. Selection and interpolation are the
-    // IDENTICAL code below either way; only the (value, prefix, count)
-    // source differs, and ascending-double order matches the range
-    // partitioning's. Past the gate the distributed pass runs verbatim.
-    val localHist: Option[Array[org.apache.spark.sql.Row]] =
-      if (localHistLimit <= 0) None
-      else {
-        val rows = hist.head(localHistLimit.toInt + 1)
-        if (rows.length <= localHistLimit) Some(rows) else None
-      }
-    val (n, at): (Long, Map[Long, Double]) = localHist match {
+    // frame of a few thousand rows. Ascending-double order matches the
+    // range partitioning's, and the interpolation is the same code.
+    BoundedCells.probe(hist, localHistLimit) match {
       case Some(hrows) =>
-        if (hrows.isEmpty) return None
-        val sorted = hrows.map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
-        val nLoc = sorted.iterator.map(_._2).sum
-        val need = probs.flatMap { p =>
-          val pos = (nLoc - 1) * p
-          Seq(pos.floor.toLong, pos.ceil.toLong)
-        }.distinct
-        var pfx = 0L
-        val atB = Map.newBuilder[Long, Double]
-        sorted.foreach { case (v, c) =>
-          need.foreach { ix => if (pfx <= ix && ix < pfx + c) atB += ix -> v }
-          pfx += c
-        }
-        (nLoc, atB.result())
+        sortedPercentiles(hrows.map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1), probs)
+          .map(_.toArray)
       case None =>
         // this branch only runs past percentileValues' own histogram gate,
         // so the primitive's inner gate would re-collect and fail — skip it
@@ -347,10 +323,7 @@ private[graft] object GlobalRank {
             localSpineLimit = 0L)
         val nDist = tots.head
         if (nDist == 0) { pinned.unpersist(false); return None }
-        val need = probs.flatMap { p =>
-          val pos = (nDist - 1) * p
-          Seq(pos.floor.toLong, pos.ceil.toLong)
-        }.distinct
+        val need = ranksNeeded(nDist, probs)
         val rows = cum
           .filter(need.map(ix =>
             col("_pl_pfx") <= ix && lit(ix) < col("_pl_pfx") + col("_pl_c"))
@@ -358,13 +331,29 @@ private[graft] object GlobalRank {
           .select(col("_pl_v"), col("_pl_pfx"), col("_pl_c"))
           .collect()
         pinned.unpersist(false)
-        (nDist, need.map { ix =>
+        val at = need.map { ix =>
           val r = rows.find(r => r.getLong(1) <= ix && ix < r.getLong(1) + r.getLong(2))
             .getOrElse(sys.error(s"percentileValues: no histogram row covers rank $ix"))
           ix -> r.getDouble(0)
-        }.toMap)
+        }.toMap
+        Some(interpolate(nDist, probs)(at).toArray)
     }
-    Some(probs.map { p =>
+  }
+
+  /** The 0-based ranks Spark's `Percentile.getPercentile` reads for
+    * `probs` over `n` sorted values: floor and ceil of (n−1)·p. */
+  private def ranksNeeded(n: Long, probs: Seq[Double]): Seq[Long] =
+    probs.flatMap { p =>
+      val pos = (n - 1) * p
+      Seq(pos.floor.toLong, pos.ceil.toLong)
+    }.distinct
+
+  /** Spark's `Percentile.getPercentile` arithmetic, verbatim: pos =
+    * (n−1)·p as Long × Double, the equal-keys shortcut, and
+    * (higher − pos)·vLo + (pos − lower)·vHi over the values `at` the
+    * [[ranksNeeded]] ranks. */
+  private def interpolate(n: Long, probs: Seq[Double])(at: Long => Double): Seq[Double] =
+    probs.map { p =>
       val pos = (n - 1) * p
       val lower = pos.floor.toLong
       val higher = pos.ceil.toLong
@@ -375,7 +364,23 @@ private[graft] object GlobalRank {
         if (hk == lk) lk
         else (higher - pos) * lk + (pos - lower) * hk
       }
-    }.toArray)
+    }
+
+  /** The interpolated percentiles of a (value, count) histogram sorted
+    * ascending by value, read off its running prefix; None when it holds
+    * no values. */
+  private def sortedPercentiles(
+      sorted: Seq[(Double, Long)], probs: Seq[Double]): Option[Seq[Double]] = {
+    val n = sorted.iterator.map(_._2).sum
+    if (n == 0) return None
+    val need = ranksNeeded(n, probs)
+    var pfx = 0L
+    val at = Map.newBuilder[Long, Double]
+    sorted.foreach { case (v, c) =>
+      need.foreach { ix => if (pfx <= ix && ix < pfx + c) at += ix -> v }
+      pfx += c
+    }
+    Some(interpolate(n, probs)(at.result()))
   }
 
   /** GROUPED [[percentileValues]]: one row per distinct `groupCol` value
@@ -412,7 +417,7 @@ private[graft] object GlobalRank {
       valueCol: String,
       probs: Seq[Double],
       outCols: Seq[String],
-      localHistLimit: Long = 1L << 18): DataFrame = {
+      localHistLimit: Long = BoundedCells.Limit): DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p >= 0 && p <= 1),
       "probs must be in [0, 1]")
     require(probs.length == outCols.length, "one output column per prob")
@@ -422,59 +427,25 @@ private[graft] object GlobalRank {
     val spark = df.sparkSession
     val v = df.select(col(groupCol).as("_gp_g"), col(valueCol).cast("double").as("_gp_v"))
     val gField = v.schema("_gp_g")
-    // in-process tier (the percentileValues gate, grouped): while the
-    // (group, value) HISTOGRAM fits one driver page, every group's
-    // positional values read off a local sorted prefix — the range-bucket
-    // machinery below (input pin, range exchange, cell collect, per-cell
-    // window, two broadcast joins, positional collect) exists for the
-    // huge-group regime where even the histogram is too wide. Selection
-    // (positional values of a sorted multiset) and the
-    // Percentile.getPercentile interpolation are value-identical; null
-    // values are ignored per group, all-null groups keep their null row,
-    // and a NULL group key keeps its own row, exactly as below.
-    if (localHistLimit > 0) {
-      val hcells = v.groupBy(col("_gp_g"), col("_gp_v"))
-        .agg(count(lit(1)).as("_c"))
-        .head(localHistLimit.toInt + 1)
-      if (hcells.length <= localHistLimit) {
-        val resRows = hcells.groupBy(r => r.get(0)).iterator.map { case (g, cs) =>
-          val sorted = cs.filter(!_.isNullAt(1))
-            .map(r => (r.getDouble(1), r.getLong(2))).sortBy(_._1)
-          val n = sorted.iterator.map(_._2).sum
-          val vals: Seq[Any] =
-            if (n == 0) probs.map(_ => null)
-            else {
-              val need = probs.flatMap { pr =>
-                val pos = (n - 1) * pr
-                Seq(pos.floor.toLong, pos.ceil.toLong)
-              }.distinct
-              var pfx = 0L
-              val atB = Map.newBuilder[Long, Double]
-              sorted.foreach { case (value, c) =>
-                need.foreach { ix =>
-                  if (pfx <= ix && ix < pfx + c) atB += ix -> value }
-                pfx += c
-              }
-              val at = atB.result()
-              probs.map { pr =>
-                val pos = (n - 1) * pr
-                val lower = pos.floor.toLong
-                val higher = pos.ceil.toLong
-                val lk = at(lower)
-                if (higher == lower) lk
-                else {
-                  val hk = at(higher)
-                  if (hk == lk) lk
-                  else (higher - pos) * lk + (pos - lower) * hk
-                }
-              }
-            }
-          Row.fromSeq(g +: vals)
-        }.toSeq
-        return spark.createDataFrame(resRows.asJava,
-          StructType(gField.copy(name = groupCol) +:
-            outCols.map(c => StructField(c, DoubleType, nullable = true))))
-      }
+    // driver tier ([[BoundedCells]], grouped): every group's positional
+    // values read off a local sorted prefix of the collected (group, value)
+    // histogram — the range-bucket machinery below (input pin, range
+    // exchange, cell collect, per-cell window, two broadcast joins,
+    // positional collect) exists for the huge-group regime where even the
+    // histogram is too wide. Null values are ignored per group, all-null
+    // groups keep their null row, and a NULL group key keeps its own row,
+    // exactly as below.
+    val hcells = BoundedCells.probe(
+      v.groupBy(col("_gp_g"), col("_gp_v")).agg(count(lit(1)).as("_c")), localHistLimit)
+    if (hcells.isDefined) {
+      val resRows = hcells.get.groupBy(r => r.get(0)).iterator.map { case (g, cs) =>
+        val sorted = cs.filter(!_.isNullAt(1))
+          .map(r => (r.getDouble(1), r.getLong(2))).sortBy(_._1)
+        Row.fromSeq(g +: sortedPercentiles(sorted, probs).getOrElse(probs.map(_ => null)))
+      }.toSeq
+      return spark.createDataFrame(resRows.asJava,
+        StructType(gField.copy(name = groupCol) +:
+          outCols.map(c => StructField(c, DoubleType, nullable = true))))
     }
     val p = math.max(1, spark.sessionState.conf.numShufflePartitions)
     // persisted to pin the sampled range boundaries: the count pass and
@@ -520,10 +491,7 @@ private[graft] object GlobalRank {
         gField.copy(name = "_gp_og"),
         StructField("_gp_off", LongType, nullable = false))))
     val needRows = nByG.iterator.collect { case (g, n) if n > 0 =>
-      probs.flatMap { pr =>
-        val pos = (n - 1) * pr
-        Seq(pos.floor.toLong, pos.ceil.toLong)
-      }.distinct.map(ix => Row(g, ix))
+      ranksNeeded(n, probs).map(ix => Row(g, ix))
     }.flatten.toSeq
     val needDf = spark.createDataFrame(needRows.asJava,
       StructType(Seq(gField.copy(name = "_gp_ng"),
@@ -545,25 +513,10 @@ private[graft] object GlobalRank {
       .collect()
       .map(r => (r.get(0), r.getLong(1)) -> r.getDouble(2)).toMap
     vr.unpersist(false)
-    // Spark Percentile.getPercentile arithmetic, verbatim (the
-    // percentileValues-proven chain): pos = (n-1)·p as Long × Double,
-    // equal-keys shortcut, (higher − pos)·vLo + (pos − lower)·vHi
     val resRows = nByG.iterator.map { case (g, n) =>
-      val vals: Seq[Any] = probs.map { pr =>
-        if (n == 0) null
-        else {
-          val pos = (n - 1) * pr
-          val lower = pos.floor.toLong
-          val higher = pos.ceil.toLong
-          val lk = at((g, lower))
-          if (higher == lower) lk
-          else {
-            val hk = at((g, higher))
-            if (hk == lk) lk
-            else (higher - pos) * lk + (pos - lower) * hk
-          }
-        }
-      }
+      val vals: Seq[Any] =
+        if (n == 0) probs.map(_ => null)
+        else interpolate(n, probs)(ix => at((g, ix)))
       Row.fromSeq(g +: vals)
     }.toSeq
     spark.createDataFrame(resRows.asJava,

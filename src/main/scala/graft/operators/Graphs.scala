@@ -39,7 +39,7 @@ object Graphs {
       k: Int,
       vecCol: String = "embedding",
       idCol: String = "vec_id",
-      matrixRowLimit: Long = 1L << 18): DataFrame =
+      matrixRowLimit: Long = BoundedCells.Limit): DataFrame =
     knnNeighbors(vectors, k, vecCol, idCol, matrixRowLimit)
       .select(col("src"), col("dst"))
 
@@ -52,7 +52,7 @@ object Graphs {
       k: Int,
       vecCol: String = "embedding",
       idCol: String = "vec_id",
-      matrixRowLimit: Long = 1L << 18): DataFrame = {
+      matrixRowLimit: Long = BoundedCells.Limit): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
     val typed = vectors.schema(idCol).dataType == LongType &&
       (vectors.schema(vecCol).dataType match {
@@ -105,7 +105,7 @@ object Graphs {
       k: Int = 5,
       vecCol: String = "embedding",
       idCol: String = "vec_id",
-      matrixRowLimit: Long = 1L << 18): DataFrame =
+      matrixRowLimit: Long = BoundedCells.Limit): DataFrame =
     clusteringCoefficientFromEdges(
       vectors.select(col(idCol)),
       knnEdges(vectors, k, vecCol, idCol, matrixRowLimit), idCol)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.BoundedCells.r4
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -212,7 +213,6 @@ object Normalize {
     val x = col(valueCol).cast("double")
     val cuts = GlobalRank.groupedPercentileTable(
       df, groupCol, valueCol, Seq(lo, hi), Seq("_lo", "_hi"))
-    def r4(c: org.apache.spark.sql.Column) = floor(c * 10000 + lit(0.5)) / 10000
     df.join(broadcast(cuts), groupCol)
       .select(col(groupCol), col(idCol), x.as(valueCol),
         r4(least(greatest(x, col("_lo")), col("_hi"))).as("clipped"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.BoundedCells.{CellSpine, r4}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -659,7 +660,6 @@ object Quality {
     val coef = fm.crossJoin(broadcast(g))
       .select(col("_f"), col("_n").as("n_fold"), b.as("_b"),
         (csy / cn - b * (csx / cn)).as("_a"))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     base.join(broadcast(coef), "_f")
       .select(col("_f"), col("n_fold"), col("_a"), col("_b"),
         (col("_y").cast("double") -
@@ -721,7 +721,6 @@ object Quality {
     val k = math.ceil((nCal + 1) * (1 - alpha)).toLong.min(nCal)
     val qhat = rankedCal.filter(col("_cx") === k - 1)
       .agg(max(col("_r")).as("_q"))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     scored.filter(!col("_cal"))
       .crossJoin(broadcast(qhat))
       .agg(count(lit(1)).as("n_eval"),
@@ -1035,7 +1034,6 @@ object Quality {
     val nb = col("_nb").cast("double")
     val d = col("_dnum").cast("double") / (na * nb)
     val lambda = sqrt(na * nb / (na + nb)) * d
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     cums
       .crossJoin(broadcast(totals))
       .agg(
@@ -1755,11 +1753,16 @@ object Quality {
   private def moodMedianLocal(
       perGV: DataFrame,
       cellLimit: Long): Option[DataFrame] = {
-    collectScreenCells(perGV, cellLimit) match {
-      case Some(cells) if cells.nonEmpty =>
-        val spark = perGV.sparkSession
-        import org.apache.spark.sql.types._
-        val sp = new CellSpineL(cells)
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("n", LongType, nullable = true),
+      StructField("k_groups", LongType, nullable = true),
+      StructField("median_v", LongType, nullable = true),
+      StructField("chi2_bp", LongType, nullable = true),
+      StructField("dof", LongType, nullable = true)))
+    BoundedCells.fold(perGV, cellLimit, schema) {
+      case cells if cells.nonEmpty =>
+        val sp = CellSpine.longs(cells)
         val med = sp.medianV
         val medIdx = java.util.Arrays.binarySearch(sp.values, med)
         val gps = sp.groupPoints.map { case (g, ng, pts) =>
@@ -1785,18 +1788,10 @@ object Quality {
           }
         }
         val ok = k > 1 && ta > 0 && ta < n
-        val row = org.apache.spark.sql.Row(
+        Some(Seq(org.apache.spark.sql.Row(
           n, k, med,
           if (ok) floorL(q.toDouble / 1073741824 * 10000 + 0.5) else null,
-          if (ok) k - 1 else null)
-        Some(spark.createDataFrame(
-          spark.sparkContext.parallelize(Seq(row), 1),
-          StructType(Seq(
-            StructField("n", LongType, nullable = true),
-            StructField("k_groups", LongType, nullable = true),
-            StructField("median_v", LongType, nullable = true),
-            StructField("chi2_bp", LongType, nullable = true),
-            StructField("dof", LongType, nullable = true)))))
+          if (ok) k - 1 else null)))
       case _ => None
     }
   }
@@ -1805,17 +1800,13 @@ object Quality {
       df: DataFrame,
       valueCol: Column,
       groupCol: Column,
-      localSpineLimit: Long = 1L << 18): DataFrame = {
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
-    // persisted: the median derivation (via the pooled histogram) and
-    // the 2×k table both consume it, and wps's sample pass would
-    // otherwise re-run the corpus-width agg a third time (the scaladoc's
-    // one-corpus-exchange claim was only true per consumer before)
-    val cells = v.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
-      .persist()
+      localSpineLimit: Long = BoundedCells.Limit): DataFrame = {
+    // persisted by the gate: the median derivation (via the pooled
+    // histogram) and the 2×k table both consume it, and wps's sample pass
+    // would otherwise re-run the corpus-width agg a third time
+    val cells = BoundedCells.cellTable(df, valueCol, groupCol, "long")
     val localMm = moodMedianLocal(cells, localSpineLimit)
-    if (localMm.isDefined) { cells.unpersist(); return localMm.get }
+    if (localMm.isDefined) return localMm.get
     val pv = cells.groupBy(col("_v"))
       .agg(sum(col("_c")).as("_cv"))
     val (withX, wTots) = GlobalRank.weightedPrefixSumsMulti(
@@ -2054,7 +2045,6 @@ object Quality {
     val vb = c2b.cast("double") / (nbd * (nbd - 1))
     val ok = col("n_a") > 1 && col("n_b") > 1 && c2b > 0
     def bp(c: Column) = floor(c * 10000 + lit(0.5)).cast("long")
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     one.select(col("n_a"), col("n_b"),
       when(col("n_a") > 1, bp(va)).otherwise(lit(null).cast("long"))
         .as("var_a_bp"),
@@ -2272,7 +2262,6 @@ object Quality {
       coalesce(sum(col("_ct").cast(dec) * col("_ct").cast(dec) *
         col("_ct").cast(dec) - col("_ct").cast(dec)),
         lit(0).cast(dec)).as("_t3"))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     val ud = col("u2d").cast("double") / 2
     val sigma2 = nad * nbd / 12 *
       ((nd + 1) - col("_t3").cast("double") / (nd * (nd - 1)))
@@ -2413,7 +2402,6 @@ object Quality {
     val term = floor(num.cast("double") * (col("_vn") - col("_v")) /
       (nad * nbd) * 1048576).cast("long")
     val w1d = col("_s2").cast("double") / 1048576
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     cums
       .join(nxt, "_ix") // inner: the last value's CDF gap is zero anyway
       .crossJoin(broadcast(totals))
@@ -2461,21 +2449,23 @@ object Quality {
     * passes, two equi-joins, one single-row moment aggregate — carries
     * distinct values or distinct pairs only.
     */
-  /** In-process tier of [[spearmanCorrelation]]: collect the bounded
-    * joint (x, y, c) histogram and fold marginal doubled midranks + the
-    * five moments on the driver. Every moment is an exact integer
-    * (BigInt == DECIMAL(38,0), order-free), the final chain is the one
-    * spelled double expression; NaN through the floor→Long display
-    * replicates via [[floorL]].
+  /** In-process tier of [[spearmanCorrelation]]: marginal doubled
+    * midranks + the five moments folded from the bounded joint (x, y, c)
+    * histogram.
     */
   private def spearmanLocal(
       joint: DataFrame,
       cellLimit: Long): Option[DataFrame] = {
-    if (cellLimit <= 0) return None
-    val cells = joint.head(cellLimit.toInt + 1)
-    if (cells.length > cellLimit || cells.isEmpty) return None
-    val spark = joint.sparkSession
     import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("n", LongType, nullable = true),
+      StructField("rho", DoubleType, nullable = true)))
+    BoundedCells.fold(joint, cellLimit, schema)(spearmanFold)
+  }
+
+  private def spearmanFold(
+      cells: Array[org.apache.spark.sql.Row]): Option[Seq[org.apache.spark.sql.Row]] = {
+    if (cells.isEmpty) return None
     // marginal doubled midranks: m2 = 2·prefix + count + 1 per axis
     def m2Of(get: org.apache.spark.sql.Row => Double): Map[Double, Long] = {
       val hist = scala.collection.mutable.Map[Double, Long]()
@@ -2514,12 +2504,7 @@ object Quality {
     if (den == 0.0) return None
     val rho = floorL((nD * decD(sxy) - decD(sx) * decD(sy)) / den
       * 10000 + 0.5).toDouble / 10000
-    val row = org.apache.spark.sql.Row(n, rho)
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(row), 1),
-      StructType(Seq(
-        StructField("n", LongType, nullable = true),
-        StructField("rho", DoubleType, nullable = true)))))
+    Some(Seq(org.apache.spark.sql.Row(n, rho)))
   }
 
   def spearmanCorrelation(
@@ -2527,19 +2512,17 @@ object Quality {
       xCol: Column,
       yCol: Column,
       idCol: String,
-      localSpineLimit: Long = 1L << 18): DataFrame = {
+      localSpineLimit: Long = BoundedCells.Limit): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val v = df
       .filter(xCol.isNotNull && yCol.isNotNull && col(idCol).isNotNull)
       .select(col(idCol).as("_id"),
         xCol.cast("double").as("_x"), yCol.cast("double").as("_y"))
-    // referenced three times (both marginals + the moment base) — persist
-    // so the row-level aggregate runs once; intra-query lifecycle, the
-    // GlobalRank discipline
+    // referenced three times (both marginals + the moment base) — the
+    // gate persists it, so the row-level aggregate runs once
     val joint = v.groupBy(col("_x"), col("_y")).agg(count(lit(1)).as("_c"))
-      .persist()
     val localSp = spearmanLocal(joint, localSpineLimit)
-    if (localSp.isDefined) { joint.unpersist(); return localSp.get }
+    if (localSp.isDefined) return localSp.get
     def m2Table(valCol: String, out: String): DataFrame = {
       val hist = joint.groupBy(col(valCol)).agg(sum(col("_c")).as("_hc"))
       GlobalRank.weightedPrefixSums(hist, valCol, "_hc", "_hp")
@@ -2700,7 +2683,6 @@ object Quality {
     val z = (kad / nad - kbd / nbd) /
       sqrt(pp * (lit(1.0) - pp) * (lit(1.0) / nad + lit(1.0) / nbd))
     def bp(c: Column) = floor(c * 10000 + lit(0.5)).cast("long")
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     side(a, "n_a", "k_a").crossJoin(broadcast(side(b, "n_b", "k_b")))
       .select(col("n_a"), col("k_a"), col("n_b"), col("k_b"),
         when(col("n_a") > 0, bp(kad / nad))
@@ -2734,7 +2716,6 @@ object Quality {
       ruleB: Column): DataFrame = {
     val bd = col("n_only_a").cast("double")
     val cd = col("n_only_b").cast("double")
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     df.filter(ruleA.isNotNull && ruleB.isNotNull)
       .agg(
         count(lit(1)).as("n"),
@@ -3065,7 +3046,6 @@ object Quality {
       .map(j => col(s"_c$j").cast(dec) * col(s"_c$j").cast(dec))
       .reduce(_ + _)
     val pe = ce.cast("double") / (nd * kd * (nd * kd))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     one.select(
       col("n"), lit(k.toLong).as("k_raters"),
       when(col("n") > 0, r4(pbar)).otherwise(lit(null).cast("double"))
@@ -3230,8 +3210,7 @@ object Quality {
       valueCol: Column,
       groupCol: Column): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
+    val v = BoundedCells.groupValues(df, valueCol, groupCol, "long")
     val groups = v.groupBy(col("_g"))
       .agg(count(lit(1)).as("_n"),
         sum(col("_v").cast(dec)).as("_s"),
@@ -3263,7 +3242,6 @@ object Quality {
     val sst = col("_qt").cast("double") - sd * sd / nd
     val ssw = sst - ssb
     val f = ssb / (kd - 1) / (ssw / (nd - kd))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     one.select(
       col("n"), col("k_groups"),
       when(col("k_groups") > 1 && col("n") > col("k_groups") && ssw > 0,
@@ -3352,7 +3330,6 @@ object Quality {
     val minS2 = aggregate(col("gs"), lit(Double.MaxValue),
       (a, e) => least(a, s2G(e)))
     val ok = col("k_groups") > 1 && minN > 1 && minS2 > 0 && lam > 0
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     one.select(col("n"), col("k_groups"),
       when(ok, r4(wStar)).otherwise(lit(null).cast("double")).as("w_star"),
       when(ok, floor(df2 * 10000 + lit(0.5)).cast("long"))
@@ -3392,13 +3369,11 @@ object Quality {
       valueCol: Column,
       groupCol: Column): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
     // the cell aggregate stays persisted after the card materializes
     // (caller-visible lifecycle, the dedup-family discipline: unpersist
     // via spark.catalog.clearCache between cards — Bench does; a library
     // caller running many cards in one session should too) — ADVICE r17
-    val cells = v.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
+    val cells = BoundedCells.cellTable(df, valueCol, groupCol, "long")
       .persist()
     val perG = cells.groupBy(col("_g")).agg(
       sum(col("_c")).as("_ng"),
@@ -3466,36 +3441,27 @@ object Quality {
     * discipline), values carry the same integer cross-mass numerators
     * as [[ksTest]] with cum_rest = cum_all − cum_g.
     *
-    * Scale shape, two tiers size-gated on the CELL table (the
-    * knnNeighbors / connectedComponents discipline): the (group, value)
-    * hash agg always runs distributed with map-side partials; while the
-    * cell table fits one driver page (≤ 2¹⁸ (group, value) cells —
-    * a bounded, documented collect of compact integer cells) the
-    * cumulative walk, the integer cross-mass supremum, and the display
-    * chain fold IN-PROCESS — the distributed form spends ~20 bounded
-    * jobs (persist, value roll-up, group table, wps pass, broadcast
-    * cross, per-group window, max agg) on a frame of a few thousand
-    * rows, pure fixed job cost. Past the gate the distributed plan runs
-    * verbatim: one value-keyed roll-up + ONE `weightedPrefixSums` pass
-    * for the global cumulative, a broadcast cross with the bounded group
+    * Scale shape, two tiers gated on the CELL table ([[BoundedCells]]):
+    * the (group, value) hash agg always runs distributed with map-side
+    * partials; under the gate the cumulative walk, the integer
+    * cross-mass supremum, and the display chain fold on the driver — the
+    * distributed form spends ~20 bounded jobs (persist, value roll-up,
+    * group table, wps pass, broadcast cross, per-group window, max agg)
+    * on a frame of a few thousand rows, pure fixed job cost. Past the
+    * gate: one value-keyed roll-up + ONE `weightedPrefixSums` pass for
+    * the global cumulative, a broadcast cross with the bounded group
     * table, a PARTITIONED window per group (never single-partition), one
-    * group-keyed max. Both tiers execute the identical arithmetic — the
-    * driver fold replicates the integer cross-mass (BigInt ==
-    * DECIMAL(38,0)), the decimal→double cast, and the display chain
-    * operation-for-operation (QualityScreenSpec pins the tiers equal).
+    * group-keyed max (QualityScreenSpec pins the tiers equal).
     */
   def groupedKsTest(
       df: DataFrame,
       valueCol: Column,
       groupCol: Column,
-      localSpineLimit: Long = 1L << 18): DataFrame = {
+      localSpineLimit: Long = BoundedCells.Limit): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("double").as("_v"))
-    val perGV = v.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
-      .persist()
+    val perGV = BoundedCells.cellTable(df, valueCol, groupCol, "double")
     val localKs = ksScreenLocal(perGV, localSpineLimit)
-    if (localKs.isDefined) { perGV.unpersist(); return localKs.get }
+    if (localKs.isDefined) return localKs.get
     val perV = perGV.groupBy(col("_v")).agg(sum(col("_c")).as("_cv"))
     val groups = perGV.groupBy(col("_g")).agg(sum(col("_c")).as("_ng"))
     val totals = perV.agg(coalesce(sum(col("_cv")), lit(0L)).as("_n"))
@@ -3516,7 +3482,6 @@ object Quality {
     val nrd = col("n_rest").cast("double")
     val d = col("_dnum").cast("double") / (ngd * nrd)
     val lambda = sqrt(ngd * nrd / (ngd + nrd)) * d
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     spine
       .withColumn("_cumg", cumG)
       .crossJoin(broadcast(totals))
@@ -3528,67 +3493,6 @@ object Quality {
         r4(d).as("ks_d"),
         r4(least(lit(1.0), lit(2.0) * exp(lit(-2.0) * lambda * lambda)))
           .as("p_value"))
-  }
-
-  /** The in-process tier of [[groupedKsTest]]: collect the bounded
-    * (group, value, count) cell table and fold the screen on the driver.
-    * Returns None past the gate (cell table larger than `cellLimit`).
-    *
-    * Arithmetic parity with the distributed plan, operation for
-    * operation: the cross-mass numerator cumg·(n−ng) − (cumall−cumg)·ng
-    * expands to cumg·n − cumall·ng exactly (integers), BigInt ==
-    * DECIMAL(38,0); the per-group supremum over the pooled value spine
-    * is evaluated only at segment endpoints (between a group's own value
-    * points cumg is constant and the numerator is linear in cumall, so
-    * the max over the segment sits at its ends) — O(cells), never
-    * O(groups × values); the decimal→double cast is BigDecimal
-    * .doubleValue like Spark's Decimal.toDouble; floor(x·10⁴+0.5)
-    * round-trips through Long exactly like Floor(DoubleType)→LongType;
-    * least(1.0, x) treats NaN as greatest, like Spark's Least ordering.
-    */
-  /** Bounded collect of a (_g, _v, _c) cell table for the in-process
-    * screen tiers; None past the gate. Shared by the KS / W1 / delta /
-    * drift-card local folds.
-    */
-  private def collectScreenCells(
-      perGV: DataFrame,
-      cellLimit: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (cellLimit <= 0) return None
-    val cells = perGV.head(cellLimit.toInt + 1)
-    if (cells.length > cellLimit) None else Some(cells)
-  }
-
-  /** Sorted pooled value spine + inclusive cumulative + per-value pooled
-    * counts + total, from collected cells — the driver mirror of the
-    * perV roll-up and the weightedPrefixSums cumulative.
-    */
-  private final class CellSpine(cells: Array[org.apache.spark.sql.Row]) {
-    val values: Array[Double] = cells.map(_.getDouble(1)).distinct.sorted
-    val cv: Array[Long] = {
-      val out = new Array[Long](values.length)
-      cells.foreach { r =>
-        out(java.util.Arrays.binarySearch(values, r.getDouble(1))) +=
-          r.getLong(2)
-      }
-      out
-    }
-    val cumAll: Array[Long] = {
-      val out = cv.clone()
-      var i = 1
-      while (i < out.length) { out(i) += out(i - 1); i += 1 }
-      out
-    }
-    val n: Long = cells.map(_.getLong(2)).sum
-    /** doubled midrank per value index: 2·exclusive-prefix + count + 1. */
-    def m2(i: Int): Long = 2L * (cumAll(i) - cv(i)) + cv(i) + 1L
-    /** group -> its (value index, count) points, index-ascending. */
-    def groupPoints: Seq[(Any, Long, Array[(Int, Long)])] =
-      cells.groupBy(_.get(0)).toSeq.map { case (g, own) =>
-        val pts = own.map(r =>
-          (java.util.Arrays.binarySearch(values, r.getDouble(1)),
-            r.getLong(2))).sortBy(_._1)
-        (g, own.map(_.getLong(2)).sum, pts)
-      }
   }
 
   /** Spark Floor(DoubleType)->LongType: Math.floor then d2l (NaN -> 0,
@@ -3622,54 +3526,21 @@ object Quality {
     }
   }
 
-  /** [[CellSpine]] for LONG-valued cell tables (the integral-measure
-    * operators: Mood, kGroupCard).
-    */
-  private final class CellSpineL(cells: Array[org.apache.spark.sql.Row]) {
-    val values: Array[Long] = cells.map(_.getLong(1)).distinct.sorted
-    val cv: Array[Long] = {
-      val out = new Array[Long](values.length)
-      cells.foreach { r =>
-        out(java.util.Arrays.binarySearch(values, r.getLong(1))) +=
-          r.getLong(2)
-      }
-      out
-    }
-    val cumAll: Array[Long] = {
-      val out = cv.clone()
-      var i = 1
-      while (i < out.length) { out(i) += out(i - 1); i += 1 }
-      out
-    }
-    val n: Long = cells.map(_.getLong(2)).sum
-    /** doubled midrank per value index: 2·exclusive-prefix + count + 1. */
-    def m2(i: Int): Long = 2L * (cumAll(i) - cv(i)) + cv(i) + 1L
-    /** smallest value whose inclusive cumulative covers half the pool. */
-    def medianV: Long = {
-      var i = 0
-      while (cumAll(i) * 2 < n) i += 1
-      values(i)
-    }
-    def groupPoints: Seq[(Any, Long, Array[(Int, Long)])] =
-      cells.groupBy(_.get(0)).toSeq.map { case (g, own) =>
-        val pts = own.map(r =>
-          (java.util.Arrays.binarySearch(values, r.getLong(1)),
-            r.getLong(2))).sortBy(_._1)
-        (g, own.map(_.getLong(2)).sum, pts)
-      }
-  }
-
   /** Spark Least(1.0, x) under the NaN-greatest ordering. */
   private def least1(x: Double): Double =
     if (java.lang.Double.isNaN(x)) 1.0 else math.min(1.0, x)
 
+  /** The driver tier of [[groupedKsTest]]. The cross-mass numerator cumg·(n−ng) − (cumall−cumg)·ng
+    * expands to cumg·n − cumall·ng exactly (integers), BigInt ==
+    * DECIMAL(38,0); the per-group supremum over the pooled value spine
+    * is evaluated only at segment endpoints (between a group's own value
+    * points cumg is constant and the numerator is linear in cumall, so
+    * the max over the segment sits at its ends) — O(cells), never
+    * O(groups × values).
+    */
   private def ksScreenLocal(
       perGV: DataFrame,
       cellLimit: Long): Option[DataFrame] = {
-    if (cellLimit <= 0) return None
-    val cells = perGV.head(cellLimit.toInt + 1)
-    if (cells.length > cellLimit) return None
-    val spark = perGV.sparkSession
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("group_key", perGV.schema("_g").dataType, nullable = true),
@@ -3677,56 +3548,39 @@ object Quality {
       StructField("n_rest", LongType, nullable = true),
       StructField("ks_d", DoubleType, nullable = true),
       StructField("p_value", DoubleType, nullable = true)))
-    def r4(x: Double): Double =
-      math.floor(x * 10000 + 0.5).toLong.toDouble / 10000
-    val out: Seq[org.apache.spark.sql.Row] =
-      if (cells.isEmpty) Seq.empty
-      else {
-        val values: Array[Double] = cells.map(_.getDouble(1)).distinct.sorted
-        val cumAll = new Array[Long](values.length)
-        cells.foreach { r =>
-          val i = java.util.Arrays.binarySearch(values, r.getDouble(1))
-          cumAll(i) += r.getLong(2)
+    BoundedCells.fold(perGV, cellLimit, schema)(ksScreenFold)
+  }
+
+  private def ksScreenFold(
+      cells: Array[org.apache.spark.sql.Row]): Option[Seq[org.apache.spark.sql.Row]] = {
+    if (cells.isEmpty) return Some(Seq.empty)
+    val sp = CellSpine.doubles(cells)
+    val gps = sp.groupPoints
+    // a group owning the whole pool divides by n_rest = 0 — under
+    // ANSI the distributed chain THROWS there; defer to it so the
+    // degenerate's error behavior stays identical
+    if (gps.exists(_._2 == sp.n)) return None
+    val nB = BigInt(sp.n)
+    Some(gps.map { case (g, ng, pts) =>
+      val ngB = BigInt(ng)
+      var cumg = 0L
+      var dnum = BigInt(0)
+      pts.foreach { case (pos, c) =>
+        if (pos > 0) {
+          val pre = (BigInt(cumg) * nB - BigInt(sp.cumAll(pos - 1)) * ngB).abs
+          if (pre > dnum) dnum = pre
         }
-        var i = 1
-        while (i < values.length) { cumAll(i) += cumAll(i - 1); i += 1 }
-        val n = cells.map(_.getLong(2)).sum
-        val grouped = cells.groupBy(_.get(0)).toSeq
-        // a group owning the whole pool divides by n_rest = 0 — under
-        // ANSI the distributed chain THROWS there; defer to it so the
-        // degenerate's error behavior stays identical
-        if (grouped.exists(_._2.map(_.getLong(2)).sum == n)) return None
-        grouped.map { case (g, own) =>
-          val ng = own.map(_.getLong(2)).sum
-          val pts = own.map(r =>
-            (java.util.Arrays.binarySearch(values, r.getDouble(1)),
-              r.getLong(2))).sortBy(_._1)
-          val nB = BigInt(n)
-          val ngB = BigInt(ng)
-          var cumg = 0L
-          var dnum = BigInt(0)
-          pts.foreach { case (pos, c) =>
-            if (pos > 0) {
-              val pre = (BigInt(cumg) * nB - BigInt(cumAll(pos - 1)) * ngB).abs
-              if (pre > dnum) dnum = pre
-            }
-            cumg += c
-            val at = (BigInt(cumg) * nB - BigInt(cumAll(pos)) * ngB).abs
-            if (at > dnum) dnum = at
-          }
-          val ngd = ng.toDouble
-          val nrd = (n - ng).toDouble
-          val d = new java.math.BigDecimal(dnum.bigInteger).doubleValue() /
-            (ngd * nrd)
-          val lambda = math.sqrt(ngd * nrd / (ngd + nrd)) * d
-          val praw = 2.0 * math.exp(-2.0 * lambda * lambda)
-          val p = if (java.lang.Double.isNaN(praw)) 1.0
-            else math.min(1.0, praw)
-          org.apache.spark.sql.Row(g, ng, n - ng, r4(d), r4(p))
-        }
+        cumg += c
+        val at = (BigInt(cumg) * nB - BigInt(sp.cumAll(pos)) * ngB).abs
+        if (at > dnum) dnum = at
       }
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1), schema))
+      val ngd = ng.toDouble
+      val nrd = (sp.n - ng).toDouble
+      val d = decD(dnum) / (ngd * nrd)
+      val lambda = math.sqrt(ngd * nrd / (ngd + nrd)) * d
+      org.apache.spark.sql.Row(g, ng, sp.n - ng, r4(d),
+        r4(least1(2.0 * math.exp(-2.0 * lambda * lambda))))
+    })
   }
 
   /** [[groupedKsTest]] with the scale fallback built in — the entry
@@ -3763,8 +3617,7 @@ object Quality {
       bins: Int = 8192): DataFrame = {
     require(bins >= 2, "groupedKsTestAuto: at least 2 bins")
     require(maxDistinct >= 0, "groupedKsTestAuto: non-negative budget")
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("double").as("_v"))
+    val v = BoundedCells.groupValues(df, valueCol, groupCol, "double")
     val nd = v.select(col("_v")).distinct().count()
     if (nd <= maxDistinct) groupedKsTest(df, valueCol, groupCol)
     else {
@@ -3806,88 +3659,72 @@ object Quality {
     * with the bounded group table, a PARTITIONED per-group window, one
     * group-keyed sum.
     */
-  /** In-process tier of [[groupedW1]] — the ksScreenLocal discipline
-    * with the W1 gap sum instead of the KS max. The walk is
-    * O(groups × values) (every pooled value contributes a gap term to
-    * every group), so the gate additionally bounds the spine product.
-    * Term-for-term the wassersteinDistance float sequence: BigInt
-    * cross-mass == DECIMAL(38,0), BigDecimal.doubleValue ==
-    * Decimal.toDouble, floorL == Floor(Double)->Long, left-associative
-    * multiply/divide order preserved verbatim.
+  /** The driver tier of [[groupedW1]]: the W1 gap sum instead of the KS
+    * max. The walk is O(groups × values) (every pooled value contributes
+    * a gap term to every group), so it also bounds the spine product.
     */
   private def w1ScreenLocal(
       perGV: DataFrame,
       cellLimit: Long): Option[DataFrame] = {
-    collectScreenCells(perGV, cellLimit) match {
-      case None => None
-      case Some(cells) =>
-        val spark = perGV.sparkSession
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          StructField("group_key", perGV.schema("_g").dataType, nullable = true),
-          StructField("n_g", LongType, nullable = true),
-          StructField("n_rest", LongType, nullable = true),
-          StructField("w1", DoubleType, nullable = true),
-          StructField("w1_norm_bp", LongType, nullable = true)))
-        def r4(x: Double): Double =
-          math.floor(x * 10000 + 0.5).toLong.toDouble / 10000
-        val out: Seq[org.apache.spark.sql.Row] =
-          if (cells.isEmpty) Seq.empty
-          else {
-            val sp = new CellSpine(cells)
-            val gps = sp.groupPoints
-            if (gps.size.toLong * sp.values.length > (1L << 20)) return None
-            // n_rest = 0 divides in the distributed gap term and THROWS
-            // under ANSI; defer the degenerate to the distributed tier
-            if (gps.exists(_._2 == sp.n)) return None
-            val nB = BigInt(sp.n)
-            val vmin = sp.values.head
-            val vmax = sp.values.last
-            gps.map { case (g, ng, pts) =>
-              val ngB = BigInt(ng)
-              val ngd = ng.toDouble
-              val nrd = (sp.n - ng).toDouble
-              var cumg = 0L
-              var s2 = 0L
-              var pi = 0
-              var i = 0
-              while (i < sp.values.length) {
-                if (pi < pts.length && pts(pi)._1 == i) {
-                  cumg += pts(pi)._2; pi += 1
-                }
-                if (i < sp.values.length - 1) {
-                  val num = (BigInt(cumg) * nB - BigInt(sp.cumAll(i)) * ngB).abs
-                  val numD = new java.math.BigDecimal(num.bigInteger).doubleValue()
-                  s2 += floorL(numD * (sp.values(i + 1) - sp.values(i)) /
-                    (ngd * nrd) * 1048576)
-                }
-                i += 1
-              }
-              val w1d = s2.toDouble / 1048576
-              val norm: Any =
-                if (vmax > vmin)
-                  floorL(w1d / (vmax - vmin) * 10000 + 0.5)
-                else null
-              org.apache.spark.sql.Row(g, ng, sp.n - ng, r4(w1d), norm)
-            }
-          }
-        Some(spark.createDataFrame(
-          spark.sparkContext.parallelize(out, 1), schema))
-    }
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("group_key", perGV.schema("_g").dataType, nullable = true),
+      StructField("n_g", LongType, nullable = true),
+      StructField("n_rest", LongType, nullable = true),
+      StructField("w1", DoubleType, nullable = true),
+      StructField("w1_norm_bp", LongType, nullable = true)))
+    BoundedCells.fold(perGV, cellLimit, schema)(w1ScreenFold)
+  }
+
+  private def w1ScreenFold(
+      cells: Array[org.apache.spark.sql.Row]): Option[Seq[org.apache.spark.sql.Row]] = {
+    if (cells.isEmpty) return Some(Seq.empty)
+    val sp = CellSpine.doubles(cells)
+    val gps = sp.groupPoints
+    if (gps.size.toLong * sp.values.length > (1L << 20)) return None
+    // n_rest = 0 divides in the distributed gap term and THROWS
+    // under ANSI; defer the degenerate to the distributed tier
+    if (gps.exists(_._2 == sp.n)) return None
+    val nB = BigInt(sp.n)
+    val vmin = sp.values.head
+    val vmax = sp.values.last
+    Some(gps.map { case (g, ng, pts) =>
+      val ngB = BigInt(ng)
+      val ngd = ng.toDouble
+      val nrd = (sp.n - ng).toDouble
+      var cumg = 0L
+      var s2 = 0L
+      var pi = 0
+      var i = 0
+      while (i < sp.values.length) {
+        if (pi < pts.length && pts(pi)._1 == i) {
+          cumg += pts(pi)._2; pi += 1
+        }
+        if (i < sp.values.length - 1) {
+          val num = (BigInt(cumg) * nB - BigInt(sp.cumAll(i)) * ngB).abs
+          s2 += floorL(decD(num) * (sp.values(i + 1) - sp.values(i)) /
+            (ngd * nrd) * 1048576)
+        }
+        i += 1
+      }
+      val w1d = s2.toDouble / 1048576
+      val norm: Any =
+        if (vmax > vmin)
+          floorL(w1d / (vmax - vmin) * 10000 + 0.5)
+        else null
+      org.apache.spark.sql.Row(g, ng, sp.n - ng, r4(w1d), norm)
+    })
   }
 
   def groupedW1(
       df: DataFrame,
       valueCol: Column,
       groupCol: Column,
-      localSpineLimit: Long = 1L << 18): DataFrame = {
+      localSpineLimit: Long = BoundedCells.Limit): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("double").as("_v"))
-    val perGV = v.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
-      .persist()
+    val perGV = BoundedCells.cellTable(df, valueCol, groupCol, "double")
     val localW1 = w1ScreenLocal(perGV, localSpineLimit)
-    if (localW1.isDefined) { perGV.unpersist(); return localW1.get }
+    if (localW1.isDefined) return localW1.get
     val perV = perGV.groupBy(col("_v")).agg(sum(col("_c")).as("_cv"))
     val groups = perGV.groupBy(col("_g")).agg(sum(col("_c")).as("_ng"))
     val totals = perV.agg(coalesce(sum(col("_cv")), lit(0L)).as("_n"),
@@ -3919,7 +3756,6 @@ object Quality {
     val term = floor(num.cast("double") * (col("_vn") - col("_v")) /
       (ngd * nrd) * 1048576).cast("long")
     val w1d = col("_s2").cast("double") / 1048576
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     val gapMass = spine
       .withColumn("_cumg", cumG)
       .crossJoin(broadcast(totals))
@@ -3975,7 +3811,6 @@ object Quality {
     val ws = transform(sequence(lit(1L), col("m")),
       i => element_at(col("ps"), i.cast("int")).getField("_p") * md /
         i.cast("double"))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     val entries = transform(sequence(lit(1L), col("m")), j => struct(
       j.as("rnk"),
       element_at(col("ps"), j.cast("int")).getField("_k").as("k"),
@@ -4026,7 +3861,6 @@ object Quality {
     val ws = transform(sequence(lit(1L), col("m")),
       i => element_at(col("ps"), i.cast("int")).getField("_p") *
         (md - i.cast("double") + 1))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     val entries = transform(sequence(lit(1L), col("m")), j => struct(
       j.as("rnk"),
       element_at(col("ps"), j.cast("int")).getField("_k").as("k"),
@@ -4078,7 +3912,6 @@ object Quality {
     val ws = transform(sequence(lit(1L), col("m")),
       i => element_at(col("ps"), i.cast("int")).getField("_p") * cm * md /
         i.cast("double"))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     val entries = transform(sequence(lit(1L), col("m")), j => struct(
       j.as("rnk"),
       element_at(col("ps"), j.cast("int")).getField("_k").as("k"),
@@ -4119,8 +3952,7 @@ object Quality {
       df: DataFrame,
       valueCol: Column,
       groupCol: Column): DataFrame = {
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
+    val v = BoundedCells.groupValues(df, valueCol, groupCol, "long")
     val med = GlobalRank.groupedPercentileTable(v, "_g", "_v", Seq(0.5), Seq("_m"))
     val dev = v.join(broadcast(med), "_g")
       .select(col("_g"),
@@ -4158,8 +3990,7 @@ object Quality {
       valueCol: Column,
       groupCol: Column): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
+    val v = BoundedCells.groupValues(df, valueCol, groupCol, "long")
     val perG = v.groupBy(col("_g"))
       .agg(count(lit(1)).as("_n"),
         sum(col("_v").cast(dec)).as("_s1"),
@@ -4230,9 +4061,7 @@ object Quality {
       df: DataFrame,
       valueCol: Column,
       groupCol: Column): DataFrame = {
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("double").as("_v"))
-    val cells = v.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
+    val cells = BoundedCells.cellTable(df, valueCol, groupCol, "double")
     val perG = cells.groupBy(col("_g"))
       .agg(sort_array(collect_list(struct(col("_v"), col("_c")))).as("cs"),
         sum(col("_c")).as("n_g"))
@@ -4299,7 +4128,6 @@ object Quality {
     val vItems = (0 until k)
       .map(i => vnum(col(s"_s$i"), col(s"_q$i"))).reduce(_ + _)
     val vTotal = vnum(col("_st"), col("_qt"))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     one.select(
       col("n"), lit(k.toLong).as("k_items"),
       when(col("n") > 1 && vTotal =!= lit(0).cast(dec),
@@ -4343,7 +4171,6 @@ object Quality {
     val cSq = (0 until k).map(i => col(s"_c$i") * col(s"_c$i")).reduce(_ + _)
     val num = (lit(k) * cSq - col("_t") * col("_t")).cast("double")
     val den = (lit(k) * col("_t") - col("_u2")).cast("double")
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     one.select(
       col("n"), lit(k.toLong).as("k_rules"),
       when(lit(k) * col("_t") =!= col("_u2"),
@@ -4370,8 +4197,7 @@ object Quality {
     * the SORTED collected group list (bounded dimension, the q229
     * idiom), and the division by the tie factor 1 − ΣT/(n³−n).
     */
-  /** In-process tier of [[kruskalWallis]] — the ksScreenLocal discipline
-    * over the doubled-midrank machinery. The H fold is order-dependent
+  /** The driver tier of [[kruskalWallis]]. The H fold is order-dependent
     * (a double sum over the SORTED group list), so the driver sort
     * replicates sort_array's type ordering via [[groupOrdering]];
     * unsupported group-key types fall back to the distributed tier.
@@ -4379,19 +4205,24 @@ object Quality {
   private def kruskalWallisLocal(
       perGV: DataFrame,
       cellLimit: Long): Option[DataFrame] = {
-    val ord = groupOrdering(perGV.schema("_g").dataType).getOrElse(return None)
-    collectScreenCells(perGV, cellLimit) match {
-      case Some(cells) if cells.nonEmpty =>
-        val spark = perGV.sparkSession
-        import org.apache.spark.sql.types._
-        val sp = new CellSpine(cells)
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("n", LongType, nullable = true),
+      StructField("k_groups", LongType, nullable = true),
+      StructField("h", DoubleType, nullable = true),
+      StructField("h_adj", DoubleType, nullable = true)))
+    // an unsupported group-key type defers without a probe
+    val ord = groupOrdering(perGV.schema("_g").dataType)
+    BoundedCells.fold(perGV, if (ord.isEmpty) 0L else cellLimit, schema) {
+      case cells if cells.nonEmpty =>
+        val sp = CellSpine.doubles(cells)
         val tt = sp.cv.iterator.map(c =>
           BigInt(c) * BigInt(c) * BigInt(c) - BigInt(c)).sum
         val gps = sp.groupPoints.map { case (g, ng, pts) =>
           val r2 = pts.iterator.map { case (i, c) =>
             BigInt(c) * BigInt(sp.m2(i)) }.sum
           (g, ng, r2)
-        }.sortBy(_._1)(ord)
+        }.sortBy(_._1)(ord.get)
         val n = sp.n
         val k = gps.size.toLong
         val nd = n.toDouble
@@ -4401,19 +4232,10 @@ object Quality {
         }
         val h = 12.0 / (nd * (nd + 1)) * foldH - 3.0 * (nd + 1)
         val corr = 1.0 - decD(tt) / (nd * nd * nd - nd)
-        def r4(x: Double): Double =
-          math.floor(x * 10000 + 0.5).toLong.toDouble / 10000
-        val row = org.apache.spark.sql.Row(
+        Some(Seq(org.apache.spark.sql.Row(
           n, k,
           if (k > 1) r4(h) else null,
-          if (k > 1 && corr > 0) r4(h / corr) else null)
-        Some(spark.createDataFrame(
-          spark.sparkContext.parallelize(Seq(row), 1),
-          StructType(Seq(
-            StructField("n", LongType, nullable = true),
-            StructField("k_groups", LongType, nullable = true),
-            StructField("h", DoubleType, nullable = true),
-            StructField("h_adj", DoubleType, nullable = true)))))
+          if (k > 1 && corr > 0) r4(h / corr) else null)))
       case _ => None
     }
   }
@@ -4422,14 +4244,11 @@ object Quality {
       df: DataFrame,
       valueCol: Column,
       groupCol: Column,
-      localSpineLimit: Long = 1L << 18): DataFrame = {
+      localSpineLimit: Long = BoundedCells.Limit): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("double").as("_v"))
-    val perGV = v.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
-      .persist()
+    val perGV = BoundedCells.cellTable(df, valueCol, groupCol, "double")
     val localKw = kruskalWallisLocal(perGV, localSpineLimit)
-    if (localKw.isDefined) { perGV.unpersist(); return localKw.get }
+    if (localKw.isDefined) return localKw.get
     val perV = perGV.groupBy(col("_v")).agg(sum(col("_c")).as("_cv"))
     val m2 = GlobalRank.weightedPrefixSums(perV, "_v", "_cv", "_pfx")
       .select(col("_v"),
@@ -4453,7 +4272,6 @@ object Quality {
         4 / e.getField("_ng").cast("double"))
     val h = lit(12.0) / (nd * (nd + 1)) * fold - lit(3.0) * (nd + 1)
     val corr = lit(1.0) - col("_tt").cast("double") / (nd * nd * nd - nd)
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     one.crossJoin(broadcast(ties)).select(
       col("n"), col("k_groups"),
       when(col("k_groups") > 1, r4(h))
@@ -4490,12 +4308,22 @@ object Quality {
   private def kGroupCardLocal(
       perGV: DataFrame,
       cellLimit: Long): Option[DataFrame] = {
-    val ord = groupOrdering(perGV.schema("_g").dataType).getOrElse(return None)
-    collectScreenCells(perGV, cellLimit) match {
-      case Some(cells) if cells.nonEmpty =>
-        val spark = perGV.sparkSession
-        import org.apache.spark.sql.types._
-        val sp = new CellSpineL(cells)
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("n", LongType, nullable = true),
+      StructField("k_groups", LongType, nullable = true),
+      StructField("f", DoubleType, nullable = true),
+      StructField("eta2_bp", LongType, nullable = true),
+      StructField("h", DoubleType, nullable = true),
+      StructField("h_adj", DoubleType, nullable = true),
+      StructField("median_v", LongType, nullable = true),
+      StructField("chi2_bp", LongType, nullable = true),
+      StructField("dof", LongType, nullable = true)))
+    // an unsupported group-key type defers without a probe
+    val ord = groupOrdering(perGV.schema("_g").dataType)
+    BoundedCells.fold(perGV, if (ord.isEmpty) 0L else cellLimit, schema) {
+      case cells if cells.nonEmpty =>
+        val sp = CellSpine.longs(cells)
         val tt = sp.cv.iterator.map(c =>
           BigInt(c) * BigInt(c) * BigInt(c) - BigInt(c)).sum
         val med = sp.medianV
@@ -4512,7 +4340,7 @@ object Quality {
             if (i > medIdx) hi += c
           }
           (g, ng, s, q, r2, hi)
-        }.sortBy(_._1)(ord)
+        }.sortBy(_._1)(ord.get)
         val n = sp.n
         val k = gps.size.toLong
         val st = gps.iterator.map(_._3).sum
@@ -4544,10 +4372,8 @@ object Quality {
         val f = ssb / (kd - 1) / (ssw / (nd - kd))
         val h = 12.0 / (nd * (nd + 1)) * foldH - 3.0 * (nd + 1)
         val corr = 1.0 - decD(tt) / (nd * nd * nd - nd)
-        def r4(x: Double): Double =
-          math.floor(x * 10000 + 0.5).toLong.toDouble / 10000
         val okMood = k > 1 && ta > 0 && ta < n
-        val row = org.apache.spark.sql.Row(
+        Some(Seq(org.apache.spark.sql.Row(
           n, k,
           if (k > 1 && n > k && ssw > 0) r4(f) else null,
           if (sst > 0) floorL(ssb / sst * 10000 + 0.5) else null,
@@ -4556,19 +4382,7 @@ object Quality {
           med,
           if (okMood) floorL(moodQ.toDouble / 1073741824 * 10000 + 0.5)
           else null,
-          if (okMood) k - 1 else null)
-        Some(spark.createDataFrame(
-          spark.sparkContext.parallelize(Seq(row), 1),
-          StructType(Seq(
-            StructField("n", LongType, nullable = true),
-            StructField("k_groups", LongType, nullable = true),
-            StructField("f", DoubleType, nullable = true),
-            StructField("eta2_bp", LongType, nullable = true),
-            StructField("h", DoubleType, nullable = true),
-            StructField("h_adj", DoubleType, nullable = true),
-            StructField("median_v", LongType, nullable = true),
-            StructField("chi2_bp", LongType, nullable = true),
-            StructField("dof", LongType, nullable = true)))))
+          if (okMood) k - 1 else null)))
       case _ => None
     }
   }
@@ -4577,14 +4391,11 @@ object Quality {
       df: DataFrame,
       valueCol: Column,
       groupCol: Column,
-      localSpineLimit: Long = 1L << 18): DataFrame = {
+      localSpineLimit: Long = BoundedCells.Limit): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
-    val cells = v.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
-      .persist()
+    val cells = BoundedCells.cellTable(df, valueCol, groupCol, "long")
     val localKg = kGroupCardLocal(cells, localSpineLimit)
-    if (localKg.isDefined) { cells.unpersist(); return localKg.get }
+    if (localKg.isDefined) return localKg.get
     val perV = cells.groupBy(col("_v")).agg(sum(col("_c")).as("_cv"))
     val pref = GlobalRank.weightedPrefixSums(perV, "_v", "_cv", "_pfx")
       .select(col("_v"), col("_cv"), col("_pfx"),
@@ -4648,7 +4459,6 @@ object Quality {
       aggregate(col("gs"), lit(0L), (a, e) =>
         a + floor(moodTerm(e) * 1073741824).cast("long")))
       .otherwise(lit(0L))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     val okMood = col("k_groups") > 1 && col("_ta") > 0 &&
       col("_ta") < col("n")
     one.select(
@@ -4704,26 +4514,34 @@ object Quality {
       perGV: DataFrame,
       cellLimit: Long,
       zCrit: Double): Option[DataFrame] = {
-    val ord = groupOrdering(perGV.schema("_g").dataType).getOrElse(return None)
-    collectScreenCells(perGV, cellLimit) match {
-      case Some(cells) if cells.nonEmpty =>
-        val spark = perGV.sparkSession
-        import org.apache.spark.sql.types._
-        val sp = new CellSpine(cells)
+    import org.apache.spark.sql.types._
+    val gType = perGV.schema("_g").dataType
+    val schema = StructType(Seq(
+      StructField("group_a", gType, nullable = true),
+      StructField("group_b", gType, nullable = true),
+      StructField("n_a", LongType, nullable = true),
+      StructField("n_b", LongType, nullable = true),
+      StructField("z_bp", LongType, nullable = true),
+      StructField("reject", BooleanType, nullable = true)))
+    // an unsupported group-key type defers without a probe
+    val ord = groupOrdering(gType)
+    BoundedCells.fold(perGV, if (ord.isEmpty) 0L else cellLimit, schema) {
+      case cells if cells.nonEmpty =>
+        val sp = CellSpine.doubles(cells)
         val tt = sp.cv.iterator.map(c =>
           BigInt(c) * BigInt(c) * BigInt(c) - BigInt(c)).sum
         val gps = sp.groupPoints.map { case (g, ng, pts) =>
           val r2 = pts.iterator.map { case (i, c) =>
             BigInt(c) * BigInt(sp.m2(i)) }.sum
           (g, ng, r2)
-        }.sortBy(_._1)(ord)
+        }.sortBy(_._1)(ord.get)
         val n = sp.n
         val nB = BigInt(n)
         val nd = n.toDouble
         val vE = nB * (nB + 1) * (nB - 1) - tt
         val ok = n > 1 && vE > 0
         val zcBp = math.floor(zCrit * 10000 + 0.5).toLong
-        val rows = for {
+        Some(for {
           i <- gps.indices
           j <- (i + 1) until gps.size
         } yield {
@@ -4741,17 +4559,7 @@ object Quality {
             case _ => null
           }
           org.apache.spark.sql.Row(ga, gb, na, nb, zb, rej)
-        }
-        val gType = perGV.schema("_g").dataType
-        Some(spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1),
-          StructType(Seq(
-            StructField("group_a", gType, nullable = true),
-            StructField("group_b", gType, nullable = true),
-            StructField("n_a", LongType, nullable = true),
-            StructField("n_b", LongType, nullable = true),
-            StructField("z_bp", LongType, nullable = true),
-            StructField("reject", BooleanType, nullable = true)))))
+        })
       case _ => None
     }
   }
@@ -4761,15 +4569,12 @@ object Quality {
       valueCol: Column,
       groupCol: Column,
       zCrit: Double = 3.2905,
-      localSpineLimit: Long = 1L << 18): DataFrame = {
+      localSpineLimit: Long = BoundedCells.Limit): DataFrame = {
     require(zCrit >= 0, "zCrit is a two-sided critical value, >= 0")
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("double").as("_v"))
-    val perGV = v.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
-      .persist()
+    val perGV = BoundedCells.cellTable(df, valueCol, groupCol, "double")
     val localDp = dunnPostHocLocal(perGV, localSpineLimit, zCrit)
-    if (localDp.isDefined) { perGV.unpersist(); return localDp.get }
+    if (localDp.isDefined) return localDp.get
     val perV = perGV.groupBy(col("_v")).agg(sum(col("_c")).as("_cv"))
     val m2 = GlobalRank.weightedPrefixSums(perV, "_v", "_cv", "_pfx")
       .select(col("_v"),
@@ -4879,7 +4684,6 @@ object Quality {
       a + e.getField("_c").cast("double") / nd *
         log(nd * e.getField("_c").cast("double") /
           (e.getField("_r").cast("double") * e.getField("_s").cast("double"))))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     one.select(
       col("n"), col("k_x"), col("k_y"),
       r4(hx).as("h_x"), r4(hy).as("h_y"), r4(mi).as("mi"),
@@ -5340,9 +5144,7 @@ object Quality {
       valueCol: Column,
       groupCol: Column): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("double").as("_v"))
-    val perGV = v.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
+    val perGV = BoundedCells.cellTable(df, valueCol, groupCol, "double")
       .persist()
     val perV = perGV.groupBy(col("_v")).agg(sum(col("_c")).as("_cv"))
     val groups = perGV.groupBy(col("_g")).agg(sum(col("_c")).as("_ng"))
@@ -5584,7 +5386,6 @@ object Quality {
       col("_g2").cast("double") * col("_t2").cast("double") / (lit(36.0) * d1S) +
       col("_g3").cast("double") * col("_t3").cast("double") / (lit(8.0) * d2S)
     val num = col("_jt2").cast("double") / 2 - p2.cast("double") / 4
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     jt.crossJoin(broadcast(gStats))
       .crossJoin(broadcast(tStats))
       .select(col("k"), col("n"),
@@ -5642,7 +5443,6 @@ object Quality {
     val varT = pbar * (lit(1.0) - pbar) *
       (col("_s2").cast("double") - s1d * s1d / ndS)
     val num = col("_t").cast("double") - pbar * s1d
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     agg.select(col("k"), col("n"), col("n_pos"),
       when(col("n") > 0 && varT > 0, r4(num / sqrt(varT)))
         .otherwise(lit(null).cast("double")).as("z"))
@@ -5710,7 +5510,6 @@ object Quality {
           (n * n * (n - 1)))
         .otherwise(lit(0.0))
     })
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     one.select(
       size(col("h")).cast("long").as("k"),
       foldL(e => e.getField("_a") + e.getField("_b") + e.getField("_c") +
@@ -5778,7 +5577,6 @@ object Quality {
     val denS = when(denI > 0, denI.cast("double")).otherwise(lit(1.0))
     val chi2 = numI.cast("double") / denS
     val w = chi2 / (col("b").cast("double") * (k - 1))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     one.select(col("b"), lit(k.toLong).as("k"),
       when(col("b") > 0 && denI > 0, r4(chi2))
         .otherwise(lit(null).cast("double")).as("chi2"),
@@ -5854,7 +5652,6 @@ object Quality {
     val denI = bDec * col("_sa") - sb
     val w = (col("b").cast("double") - 1) * sb.cast("double") /
       when(denI > 0, denI.cast("double")).otherwise(lit(1.0))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     one.select(col("b"), lit(k.toLong).as("k"),
       when(col("b") > 1 && denI > 0, r4(w))
         .otherwise(lit(null).cast("double")).as("w"))
@@ -5884,108 +5681,97 @@ object Quality {
     * broadcast cross, one PARTITIONED per-group window, one group-keyed
     * aggregate carrying three folds, then the bounded BH list step.
     */
-  /** In-process tier of [[driftScreenCard]]'s five folds — the
-    * ksScreenLocal / w1ScreenLocal discipline with all five masses
-    * accumulated in ONE O(groups × values) walk (spine-product gated).
-    * Every term replicates the distributed card's float sequence
-    * verbatim, including the nrdS complement guard, the per-term
-    * left-associative multiply/divide order, and the quantization
-    * grains.
+  /** The driver tier of [[driftScreenCard]]'s five folds, accumulated
+    * in ONE O(groups × values) walk (spine-product gated), including the
+    * distributed card's nrdS complement guard.
     */
   private def driftCardScreensLocal(
       perGV: DataFrame,
       cellLimit: Long): Option[DataFrame] = {
-    collectScreenCells(perGV, cellLimit) match {
-      case None => None
-      case Some(cells) =>
-        val spark = perGV.sparkSession
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          StructField("group_key", perGV.schema("_g").dataType, nullable = true),
-          StructField("n_g", LongType, nullable = true),
-          StructField("n_rest", LongType, nullable = true),
-          StructField("ks_d", DoubleType, nullable = true),
-          StructField("p_value", DoubleType, nullable = true),
-          StructField("w1", DoubleType, nullable = true),
-          StructField("w1_norm_bp", LongType, nullable = true),
-          StructField("auc_bp", LongType, nullable = true),
-          StructField("cliff_bp", LongType, nullable = true),
-          StructField("cvm_bp", LongType, nullable = true),
-          StructField("energy", DoubleType, nullable = true)))
-        def r4(x: Double): Double =
-          math.floor(x * 10000 + 0.5).toLong.toDouble / 10000
-        val out: Seq[org.apache.spark.sql.Row] =
-          if (cells.isEmpty) Seq.empty
-          else {
-            val sp = new CellSpine(cells)
-            val gps = sp.groupPoints
-            if (gps.size.toLong * sp.values.length > (1L << 20)) return None
-            val nB = BigInt(sp.n)
-            val vmin = sp.values.head
-            val vmax = sp.values.last
-            gps.map { case (g, ng, pts) =>
-              val ngB = BigInt(ng)
-              val ngd = ng.toDouble
-              val rest = sp.n > ng
-              val nrdS = if (rest) (sp.n - ng).toDouble else 1.0
-              val nrd = (sp.n - ng).toDouble
-              var cumg = 0L
-              var dnum = BigInt(0)
-              var w1q = 0L
-              var u2 = BigInt(0)
-              var cvmq = 0L
-              var enq = 0L
-              var pi = 0
-              var i = 0
-              while (i < sp.values.length) {
-                if (pi < pts.length && pts(pi)._1 == i) {
-                  val c = pts(pi)._2
-                  cumg += c
-                  val below = BigInt(sp.cumAll(i) - sp.cv(i)) - BigInt(cumg - c)
-                  val tie = BigInt(sp.cv(i) - c)
-                  u2 += BigInt(c) * (BigInt(2) * below + tie)
-                  pi += 1
-                }
-                val num = (BigInt(cumg) * nB - BigInt(sp.cumAll(i)) * ngB).abs
-                if (num > dnum) dnum = num
-                val numD = new java.math.BigDecimal(num.bigInteger).doubleValue()
-                val gapC = numD / (ngd * nrdS)
-                cvmq += floorL(sp.cv(i).toDouble * gapC * gapC * 1073741824.0)
-                if (i < sp.values.length - 1) {
-                  val gap = sp.values(i + 1) - sp.values(i)
-                  w1q += floorL(numD * gap / (ngd * nrdS) * 1048576)
-                  enq += floorL(gapC * gapC * gap * 1048576.0)
-                }
-                i += 1
-              }
-              val dnumD = new java.math.BigDecimal(dnum.bigInteger).doubleValue()
-              val dS = dnumD / (ngd * nrdS)
-              val lambda = math.sqrt(ngd * nrdS / (ngd + nrdS)) * dS
-              val w1d = w1q.toDouble / 1048576
-              val u2D = new java.math.BigDecimal(u2.bigInteger).doubleValue()
-              val cvmT = cvmq.toDouble / 1073741824.0 * (ngd * nrd) /
-                ((ngd + nrd) * (ngd + nrd))
-              val enD = 2.0 * (enq.toDouble / 1048576.0)
-              org.apache.spark.sql.Row(
-                g, ng, sp.n - ng,
-                if (rest) r4(dS) else null,
-                if (rest) r4(least1(2.0 * math.exp(-2.0 * lambda * lambda)))
-                else null,
-                if (rest) r4(w1d) else null,
-                if (rest && vmax > vmin)
-                  floorL(w1d / (vmax - vmin) * 10000 + 0.5)
-                else null,
-                if (rest) floorL(u2D / (2.0 * ngd * nrd) * 10000 + 0.5)
-                else null,
-                if (rest) floorL((u2D / (ngd * nrd) - 1) * 10000 + 0.5)
-                else null,
-                if (rest) floorL(cvmT * 10000 + 0.5) else null,
-                if (rest) r4(enD) else null)
-            }
-          }
-        Some(spark.createDataFrame(
-          spark.sparkContext.parallelize(out, 1), schema))
-    }
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("group_key", perGV.schema("_g").dataType, nullable = true),
+      StructField("n_g", LongType, nullable = true),
+      StructField("n_rest", LongType, nullable = true),
+      StructField("ks_d", DoubleType, nullable = true),
+      StructField("p_value", DoubleType, nullable = true),
+      StructField("w1", DoubleType, nullable = true),
+      StructField("w1_norm_bp", LongType, nullable = true),
+      StructField("auc_bp", LongType, nullable = true),
+      StructField("cliff_bp", LongType, nullable = true),
+      StructField("cvm_bp", LongType, nullable = true),
+      StructField("energy", DoubleType, nullable = true)))
+    BoundedCells.fold(perGV, cellLimit, schema)(driftCardScreensFold)
+  }
+
+  private def driftCardScreensFold(
+      cells: Array[org.apache.spark.sql.Row]): Option[Seq[org.apache.spark.sql.Row]] = {
+    if (cells.isEmpty) return Some(Seq.empty)
+    val sp = CellSpine.doubles(cells)
+    val gps = sp.groupPoints
+    if (gps.size.toLong * sp.values.length > (1L << 20)) return None
+    val nB = BigInt(sp.n)
+    val vmin = sp.values.head
+    val vmax = sp.values.last
+    Some(gps.map { case (g, ng, pts) =>
+      val ngB = BigInt(ng)
+      val ngd = ng.toDouble
+      val rest = sp.n > ng
+      val nrdS = if (rest) (sp.n - ng).toDouble else 1.0
+      val nrd = (sp.n - ng).toDouble
+      var cumg = 0L
+      var dnum = BigInt(0)
+      var w1q = 0L
+      var u2 = BigInt(0)
+      var cvmq = 0L
+      var enq = 0L
+      var pi = 0
+      var i = 0
+      while (i < sp.values.length) {
+        if (pi < pts.length && pts(pi)._1 == i) {
+          val c = pts(pi)._2
+          cumg += c
+          val below = BigInt(sp.cumAll(i) - sp.cv(i)) - BigInt(cumg - c)
+          val tie = BigInt(sp.cv(i) - c)
+          u2 += BigInt(c) * (BigInt(2) * below + tie)
+          pi += 1
+        }
+        val num = (BigInt(cumg) * nB - BigInt(sp.cumAll(i)) * ngB).abs
+        if (num > dnum) dnum = num
+        val numD = decD(num)
+        val gapC = numD / (ngd * nrdS)
+        cvmq += floorL(sp.cv(i).toDouble * gapC * gapC * 1073741824.0)
+        if (i < sp.values.length - 1) {
+          val gap = sp.values(i + 1) - sp.values(i)
+          w1q += floorL(numD * gap / (ngd * nrdS) * 1048576)
+          enq += floorL(gapC * gapC * gap * 1048576.0)
+        }
+        i += 1
+      }
+      val dnumD = decD(dnum)
+      val dS = dnumD / (ngd * nrdS)
+      val lambda = math.sqrt(ngd * nrdS / (ngd + nrdS)) * dS
+      val w1d = w1q.toDouble / 1048576
+      val u2D = decD(u2)
+      val cvmT = cvmq.toDouble / 1073741824.0 * (ngd * nrd) /
+        ((ngd + nrd) * (ngd + nrd))
+      val enD = 2.0 * (enq.toDouble / 1048576.0)
+      org.apache.spark.sql.Row(
+        g, ng, sp.n - ng,
+        if (rest) r4(dS) else null,
+        if (rest) r4(least1(2.0 * math.exp(-2.0 * lambda * lambda)))
+        else null,
+        if (rest) r4(w1d) else null,
+        if (rest && vmax > vmin)
+          floorL(w1d / (vmax - vmin) * 10000 + 0.5)
+        else null,
+        if (rest) floorL(u2D / (2.0 * ngd * nrd) * 10000 + 0.5)
+        else null,
+        if (rest) floorL((u2D / (ngd * nrd) - 1) * 10000 + 0.5)
+        else null,
+        if (rest) floorL(cvmT * 10000 + 0.5) else null,
+        if (rest) r4(enD) else null)
+    })
   }
 
   def driftScreenCard(
@@ -5993,17 +5779,11 @@ object Quality {
       valueCol: Column,
       groupCol: Column,
       fdrQ: Double = 0.1,
-      localSpineLimit: Long = 1L << 18): DataFrame = {
+      localSpineLimit: Long = BoundedCells.Limit): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("double").as("_v"))
-    val perGV = v.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
-      .persist()
+    val perGV = BoundedCells.cellTable(df, valueCol, groupCol, "double")
     val localScreens = driftCardScreensLocal(perGV, localSpineLimit)
-    if (localScreens.isDefined) {
-      perGV.unpersist()
-      return driftCardTail(localScreens.get, fdrQ)
-    }
+    if (localScreens.isDefined) return driftCardTail(localScreens.get, fdrQ)
     val perV = perGV.groupBy(col("_v")).agg(sum(col("_c")).as("_cv"))
     val groups = perGV.groupBy(col("_g")).agg(sum(col("_c")).as("_ng"))
     val totals = perV.agg(coalesce(sum(col("_cv")), lit(0L)).as("_n"),
@@ -6067,7 +5847,6 @@ object Quality {
     val cvmT = col("_cvmq").cast("double") / 1073741824.0 *
       (ngd * nrd) / ((ngd + nrd) * (ngd + nrd))
     val enD = lit(2.0) * (col("_enq").cast("double") / 1048576.0)
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     def bp(c: Column) = floor(c * 10000 + lit(0.5)).cast("long")
     val screens = perGroup.select(
       col("_g").as("group_key"), col("_ng").as("n_g"),
@@ -6173,7 +5952,6 @@ object Quality {
     val term = floor(gap * gap * (col("_vn") - col("_v")) *
       lit(1048576.0)).cast("long")
     val ed = lit(2.0) * (col("_s2").cast("double") / 1048576.0)
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     cums
       .join(nxt, "_ix")
       .crossJoin(broadcast(totals))
@@ -6288,7 +6066,6 @@ object Quality {
     val devS = col("_devq").cast("double") / 1048576.0
     val vSum = col("_vq").cast("double") / 1048576.0
     val vSumS = when(col("_vq") > 0, vSum).otherwise(lit(1.0))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     sums
       .crossJoin(broadcast(totals))
       .select(col("k").cast("long").as("k"), col("n"),
@@ -6330,47 +6107,43 @@ object Quality {
     */
   /** In-process tier of [[groupedCliffsDelta]] — O(cells): the dominance
     * mass only accumulates at a group's OWN value points (the term
-    * carries a _c factor, zero elsewhere). BigInt == the DECIMAL(38,0)
-    * chain; display chain verbatim.
+    * carries a _c factor, zero elsewhere).
     */
   private def cliffsDeltaLocal(
       perGV: DataFrame,
       cellLimit: Long): Option[DataFrame] = {
-    collectScreenCells(perGV, cellLimit).map { cells =>
-      val spark = perGV.sparkSession
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("group_key", perGV.schema("_g").dataType, nullable = true),
-        StructField("n_g", LongType, nullable = true),
-        StructField("n_rest", LongType, nullable = true),
-        StructField("auc_bp", LongType, nullable = true),
-        StructField("cliff_bp", LongType, nullable = true)))
-      val out: Seq[org.apache.spark.sql.Row] =
-        if (cells.isEmpty) Seq.empty
-        else {
-          val sp = new CellSpine(cells)
-          sp.groupPoints.map { case (g, ng, pts) =>
-            val ngd = ng.toDouble
-            val nrd = (sp.n - ng).toDouble
-            var cumg = 0L
-            var u2 = BigInt(0)
-            pts.foreach { case (pos, c) =>
-              cumg += c
-              val below = BigInt(sp.cumAll(pos) - sp.cv(pos)) - BigInt(cumg - c)
-              val tie = BigInt(sp.cv(pos) - c)
-              u2 += BigInt(c) * (BigInt(2) * below + tie)
-            }
-            val u2D = new java.math.BigDecimal(u2.bigInteger).doubleValue()
-            val auc: Any =
-              if (sp.n > ng) floorL(u2D / (2.0 * ngd * nrd) * 10000 + 0.5)
-              else null
-            val cliff: Any =
-              if (sp.n > ng) floorL((u2D / (ngd * nrd) - 1) * 10000 + 0.5)
-              else null
-            org.apache.spark.sql.Row(g, ng, sp.n - ng, auc, cliff)
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("group_key", perGV.schema("_g").dataType, nullable = true),
+      StructField("n_g", LongType, nullable = true),
+      StructField("n_rest", LongType, nullable = true),
+      StructField("auc_bp", LongType, nullable = true),
+      StructField("cliff_bp", LongType, nullable = true)))
+    BoundedCells.fold(perGV, cellLimit, schema) { cells =>
+      if (cells.isEmpty) Some(Seq.empty)
+      else {
+        val sp = CellSpine.doubles(cells)
+        Some(sp.groupPoints.map { case (g, ng, pts) =>
+          val ngd = ng.toDouble
+          val nrd = (sp.n - ng).toDouble
+          var cumg = 0L
+          var u2 = BigInt(0)
+          pts.foreach { case (pos, c) =>
+            cumg += c
+            val below = BigInt(sp.cumAll(pos) - sp.cv(pos)) - BigInt(cumg - c)
+            val tie = BigInt(sp.cv(pos) - c)
+            u2 += BigInt(c) * (BigInt(2) * below + tie)
           }
-        }
-      spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
+          val u2D = decD(u2)
+          val auc: Any =
+            if (sp.n > ng) floorL(u2D / (2.0 * ngd * nrd) * 10000 + 0.5)
+            else null
+          val cliff: Any =
+            if (sp.n > ng) floorL((u2D / (ngd * nrd) - 1) * 10000 + 0.5)
+            else null
+          org.apache.spark.sql.Row(g, ng, sp.n - ng, auc, cliff)
+        })
+      }
     }
   }
 
@@ -6378,14 +6151,11 @@ object Quality {
       df: DataFrame,
       valueCol: Column,
       groupCol: Column,
-      localSpineLimit: Long = 1L << 18): DataFrame = {
+      localSpineLimit: Long = BoundedCells.Limit): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val v = df.filter(valueCol.isNotNull && groupCol.isNotNull)
-      .select(groupCol.as("_g"), valueCol.cast("double").as("_v"))
-    val perGV = v.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
-      .persist()
+    val perGV = BoundedCells.cellTable(df, valueCol, groupCol, "double")
     val localCd = cliffsDeltaLocal(perGV, localSpineLimit)
-    if (localCd.isDefined) { perGV.unpersist(); return localCd.get }
+    if (localCd.isDefined) return localCd.get
     val perV = perGV.groupBy(col("_v")).agg(sum(col("_c")).as("_cv"))
     val groups = perGV.groupBy(col("_g")).agg(sum(col("_c")).as("_ng"))
     val totals = perV.agg(coalesce(sum(col("_cv")), lit(0L)).as("_n"))

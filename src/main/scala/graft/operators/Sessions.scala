@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.BoundedCells.r4
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -524,7 +525,6 @@ object Sessions {
       element_at(col("_sl"), ((p + 1) / 2).cast("int")))
       .otherwise((element_at(col("_sl"), (p / 2).cast("int")) +
         element_at(col("_sl"), (p / 2 + 1).cast("int"))) / 2)
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     series
       // sequence(2, 1) would step DOWNWARD (the bhAdjust lesson): a
       // single-day series must not build pair indices at all
@@ -590,7 +590,6 @@ object Sessions {
     val kd = col("_k").cast("double")
     val p = least(lit(1.0),
       lit(2.0) * exp(lit(-6.0) * kd * kd / (md * md * md + md * md)))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     series
       // sequence(2, 1) would step DOWNWARD (the bhAdjust lesson): a
       // single-day series builds no split candidates at all
@@ -764,7 +763,6 @@ object Sessions {
           .otherwise(lit(0.0))
       }),
       lit(0.0), (a, x) => a + x)
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     withTotals
       .select(col("na").as("n_a"), col("nb").as("n_b"),
         col("_oa").as("obs_a"),
@@ -1497,7 +1495,6 @@ object Sessions {
     val eta = col("_knum").cast("double") / col("_kden").cast("double")
     val etaBp = floor(eta * 10000 + lit(0.5)).cast("long")
     val kOk = col("m") > 1 && col("_kden") > 0
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     series
       .withColumn("_ms", when(col("m") > 1, mkS).otherwise(lit(0L)))
       .withColumn("_mtau", when(col("m") > 1, mkTau).otherwise(lit(0L)))

@@ -9,12 +9,19 @@ import org.apache.spark.sql.types.{MapType, StringType}
 /** The ingest projections as they were built before the one-read kernel:
   * three `get_json_object`s and a `json_drop_keys` for the table rows, a
   * `from_json` and one more `get_json_object` for the dead letters. Kept
-  * as the oracle the kernel's projections are checked against.
+  * as the oracle the kernel's projections are checked against, with one
+  * rule taken from the kernel: a `created` without a time is null.
   */
 object IngestOracle {
 
-  private def created(raw: Column): Column =
-    get_json_object(raw, "$.created").try_cast("double")
+  /** The kernel's rule for `created`: null unless its microseconds
+    * (`× 10⁶`) fit a Long, where `timestamp_seconds` would saturate to
+    * year ±294247 instead of failing. */
+  private def created(raw: Column): Column = {
+    val c = get_json_object(raw, "$.created").try_cast("double")
+    val bound = lit(9.223372036854775808e18) // 2^63
+    when(c * 1e6 >= -bound && c * 1e6 < bound, c)
+  }
 
   def logs(raw: DataFrame, config: IngestConfig = IngestConfig()): DataFrame = {
     val removed = (config.dropFields ++ IngestConfig.PromotedFields).distinct

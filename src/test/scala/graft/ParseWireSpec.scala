@@ -2,13 +2,16 @@ package graft
 
 import graft.ingest.{IngestTransform, MetricIngest}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.unix_micros
 
 /** Where the one-read kernel departs from the expressions it replaced, on
   * purpose: every line now lands in exactly one of the two outputs. The
   * old split lost a line whose `created` cast to NaN or infinity (no time,
   * yet no dead letter), and it read non-standard JSON with three parsers
   * of different leniency, so such a line could land in `logs` with a null
-  * payload, or in both outputs. The kernel reads standard JSON only.
+  * payload, or in both outputs. The kernel reads standard JSON only, and
+  * a `created` whose microseconds do not fit a Long has no time (the old
+  * `timestamp_seconds` saturated it to year ±294247).
   * Also pins the plan: one parse per line, filter above it.
   */
 class ParseWireSpec extends SparkSpec {
@@ -23,6 +26,18 @@ class ParseWireSpec extends SparkSpec {
   test("a created that casts to NaN or infinity is dead-lettered, not lost") {
     for (c <- Seq("\"NaN\"", "\"Infinity\"", "\"-inf\"", "1e400", "9" * 400))
       assert(outcome(s"""{"created":$c,"message":"m"}""") == (0L, Seq("missing_created")), c)
+  }
+
+  test("a created past a Long of microseconds is dead-lettered, not saturated") {
+    for (c <- Seq("9.3e18", "-1e20", "\"1e20\"", "123456789012345678901234567890"))
+      assert(outcome(s"""{"created":$c,"message":"m"}""") == (0L, Seq("missing_created")), c)
+  }
+
+  test("the largest created whose microseconds fit a Long lands") {
+    val raw = Seq("""{"created":9223372036854.773,"message":"m"}""").toDF("value")
+    val micros = IngestTransform(raw).select(unix_micros($"time")).as[Long].collect()
+    assert(micros.toSeq == Seq(9223372036854773760L))
+    assert(IngestTransform.deadLetter(raw).count() == 0L)
   }
 
   test("non-standard JSON is malformed: one outcome, never a null payload") {
